@@ -1069,30 +1069,32 @@ def _bench_databound_scaled(
             "spark.sql.adaptive.advisoryPartitionSizeInBytes",
             str(4 * 1024 * 1024),
         )
-        t0 = time.perf_counter()
-        for name, df in tabs.items():
-            df.repartition(8 * K).write.mode("overwrite").parquet(
-                os.path.join(tmp, f"{name}.parquet")
-            )
-        build_sec = round(time.perf_counter() - t0, 2)
-        out: dict = {"factor": K, "build_sec": build_sec, "entries": {}}
-        for name in entries:
-            fn, _sql = CATALOG[name]
-            spark.sparkContext.setJobDescription(f"dbscale:{name}")
+        try:
             t0 = time.perf_counter()
-            fn(spark, tmp).write.format("noop").mode("overwrite").save()
-            cold = round(time.perf_counter() - t0, 3)
-            warms = []
-            for _ in range(2):
+            for name, df in tabs.items():
+                df.repartition(8 * K).write.mode("overwrite").parquet(
+                    os.path.join(tmp, f"{name}.parquet")
+                )
+            build_sec = round(time.perf_counter() - t0, 2)
+            out: dict = {"factor": K, "build_sec": build_sec, "entries": {}}
+            for name in entries:
+                fn, _sql = CATALOG[name]
+                spark.sparkContext.setJobDescription(f"dbscale:{name}")
                 t0 = time.perf_counter()
                 fn(spark, tmp).write.format("noop").mode("overwrite").save()
-                warms.append(round(time.perf_counter() - t0, 3))
-            out["entries"][name] = {"cold": cold, "warm_min": min(warms)}
+                cold = round(time.perf_counter() - t0, 3)
+                warms = []
+                for _ in range(2):
+                    t0 = time.perf_counter()
+                    fn(spark, tmp).write.format("noop").mode("overwrite").save()
+                    warms.append(round(time.perf_counter() - t0, 3))
+                out["entries"][name] = {"cold": cold, "warm_min": min(warms)}
+        finally:
             spark.sparkContext.setJobDescription(None)
-        spark.conf.set("spark.sql.files.maxPartitionBytes", prev_mpb)
-        spark.conf.set(
-            "spark.sql.adaptive.advisoryPartitionSizeInBytes", prev_adv
-        )
+            spark.conf.set("spark.sql.files.maxPartitionBytes", prev_mpb)
+            spark.conf.set(
+                "spark.sql.adaptive.advisoryPartitionSizeInBytes", prev_adv
+            )
         return out
 
 

@@ -760,7 +760,15 @@ _TOUCHED_ROUND = 15
 #: similarity_topk_ivf, semantic_dedup, semantic_decontaminate) share
 #: the BLAS-pinned trainer with pq_topk_rerank but are bit-identical
 #: across pool sizes (pinned by tests/test_blas.py), so the one forced
-#: rerank row driver-exercises the pinned kernel for the family.
+#: rerank row driver-exercises the pinned kernel for the family.  The
+#: LSH-pin entries (minhash_near_dup, ngram_jaccard_dup,
+#: dup_components) run through the changed ``lsh_pairs_from_tokens``
+#: pin logic but are not re-gated either: ``pin=None`` autodetects off
+#: when the token table is narrower than ``spark.sql.shuffle.partitions``,
+#: which every gate-scale input is, so their plans there are unchanged.
+#: ``sources.testdata.load_table``'s per-session schema cache adds no
+#: entry: it returns the same frame to every entry, and the oracle
+#: suite hash-checks all of them on every run.
 _TOUCHED_THIS_ROUND: frozenset[str] = frozenset(
     {
         "pq_topk_rerank",             # r15: single-thread BLAS scope around

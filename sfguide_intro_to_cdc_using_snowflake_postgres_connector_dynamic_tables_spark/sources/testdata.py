@@ -4,17 +4,29 @@ Tables: region nation customer supplier part orders lineitem events
 documents embeddings -- one parquet file (or directory) each under
 ``/root/testdata/sf{0.001,0.01,0.1}/``.
 
-Scans are plain ``spark.read.parquet`` so Catalyst keeps predicate
-pushdown + column pruning; callers must select only what they need --
-the whole point of a columnar scan at 100 TB is never reading the
-other columns.
+Scans are plain parquet reads so Catalyst keeps predicate pushdown +
+column pruning; callers must select only what they need -- the whole
+point of a columnar scan at 100 TB is never reading the other columns.
+
+Schema inference runs a Spark job per ``spark.read.parquet`` call, and
+the catalog reads the same tables over and over. ``load_table`` therefore
+infers each table's schema once per SparkSession and reads it again under
+that explicit schema, which runs no job. The cache lives with the session
+(nothing is persisted) and is keyed on the table's absolute path plus a
+file fingerprint -- ``(st_mtime_ns, st_size, st_ino)`` for a single
+file, the sorted ``(name, size, mtime_ns)`` of the data files for a
+directory of parts -- so a table rewritten in place is inferred (and
+checked) again.
 """
 
 from __future__ import annotations
 
 import os
+import stat
+import weakref
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import LongType, StructType, TimestampNTZType, TimestampType
 
 TESTDATA_TABLES: tuple[str, ...] = (
     "region",
@@ -67,8 +79,74 @@ EXPECTED_COLUMNS: dict[str, set[str]] = {
 }
 
 
+#: session -> {absolute table path: (fingerprint, checked schema)}. A
+#: rewrite replaces its path's entry, so the map stays one entry a table;
+#: two threads racing on a miss at worst both infer.
+_SCHEMAS: weakref.WeakKeyDictionary[SparkSession, dict[str, tuple[tuple, StructType]]] = (
+    weakref.WeakKeyDictionary()
+)
+
+
+def _hidden(name: str) -> bool:
+    """Names Spark's file index skips (``_SUCCESS``, ``.crc``,
+    ``_temporary``); ``k=v`` partition directories are data."""
+    return name.startswith(".") or (name.startswith("_") and "=" not in name)
+
+
+def _fingerprint(path: str) -> tuple | None:
+    """What a rewrite of the table at ``path`` changes; None when the
+    path cannot be stat'ed locally (missing, or a remote URI), which
+    leaves the read uncached."""
+    try:
+        st = os.stat(path)
+        if not stat.S_ISDIR(st.st_mode):
+            return (st.st_mtime_ns, st.st_size, st.st_ino)
+        parts = []
+        for dirpath, dirs, files in os.walk(path):
+            dirs[:] = [d for d in dirs if not _hidden(d)]
+            for f in files:
+                if not _hidden(f):
+                    full = os.path.join(dirpath, f)
+                    fst = os.stat(full)
+                    parts.append((os.path.relpath(full, path), fst.st_size, fst.st_mtime_ns))
+        return tuple(sorted(parts))
+    except OSError:
+        return None
+
+
+def _check_schema(schema: StructType, name: str) -> None:
+    """Raise a clear TypeError if ``schema`` lacks a column the plans
+    rely on, or if ``events.ts`` has a physical type ``load_table``
+    cannot normalize."""
+    expected = EXPECTED_COLUMNS.get(name)
+    if expected is not None and not expected.issubset(schema.names):
+        missing = sorted(expected - set(schema.names))
+        raise TypeError(
+            f"testdata format changed: table {name!r} is missing expected "
+            f"columns {missing} (got {schema.names}); update "
+            "sources/testdata.py:EXPECTED_COLUMNS for the new layout"
+        )
+    if name == "events":
+        ts_type = schema["ts"].dataType
+        if not isinstance(ts_type, (LongType, TimestampType, TimestampNTZType)):
+            raise TypeError(
+                f"testdata format changed: events.ts loaded as "
+                f"{ts_type.simpleString()!r} (expected bigint nanos or a "
+                "timestamp type); update sources/testdata.py:load_table for "
+                "the new layout"
+            )
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one testdata table as a DataFrame.
+
+    The first read of a table in a session infers its parquet schema
+    (one Spark job) and checks it; once the checks pass, the schema is
+    cached under the table's absolute path and file fingerprint (see
+    the module docstring), and every later read of the unchanged table
+    passes it to ``spark.read.schema(...)`` and runs no job. A table
+    that fails a check is not cached, so it raises again on its next
+    read; a table rewritten in place is inferred and checked afresh.
 
     ``events.ts`` has shifted physical type across testdata generations:
     older drops wrote parquet TIMESTAMP(NANOS) (which Spark only reads
@@ -80,28 +158,26 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """
     if name == "events":
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-    expected = EXPECTED_COLUMNS.get(name)
-    if expected is not None and not expected.issubset(set(df.columns)):
-        missing = sorted(expected - set(df.columns))
-        raise TypeError(
-            f"testdata format changed: table {name!r} is missing expected "
-            f"columns {missing} (got {df.columns}); update "
-            "sources/testdata.py:EXPECTED_COLUMNS for the new layout"
-        )
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    abs_path = os.path.abspath(path)
+    fp = _fingerprint(path)
+    schemas = _SCHEMAS.setdefault(spark, {})
+    cached = schemas.get(abs_path)
+    if cached is not None and cached[0] == fp:  # only fingerprinted reads are cached
+        schema = cached[1]
+        df = spark.read.schema(schema).parquet(path)
+    else:
+        df = spark.read.parquet(path)
+        schema = df.schema
+        _check_schema(schema, name)
+        if fp is not None:
+            schemas[abs_path] = (fp, schema)
     if name == "events":
         from pyspark.sql import functions as F
 
-        ts_type = dict(df.dtypes)["ts"]
-        if ts_type == "bigint":
+        if isinstance(schema["ts"].dataType, LongType):
             return df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
-        if ts_type in ("timestamp", "timestamp_ntz"):
-            return df.withColumn("ts", F.col("ts").cast("timestamp"))
-        raise TypeError(
-            f"testdata format changed: events.ts loaded as {ts_type!r} "
-            "(expected bigint nanos or a timestamp type); update "
-            "sources/testdata.py:load_table for the new layout"
-        )
+        return df.withColumn("ts", F.col("ts").cast("timestamp"))
     return df
 
 

@@ -1327,9 +1327,14 @@ class ParquetTableStore:
         stats pass), skipping this method's own bucket-id collect.
         CONTRACT: the list must contain every bucket of an upsert
         row's key AND every bucket where a ``touched_keys`` key is
-        currently STORED -- buckets outside it are carried over
-        verbatim, so a missing bucket would silently skip deletes in
-        it.  (A touched key that is neither stored nor re-upserted may
+        currently STORED.  Buckets outside it are carried over
+        verbatim, so a missing delete-only bucket silently keeps the
+        rows it should have deleted.  A missing UPSERT bucket is worse:
+        its staged rows would replace the bucket, losing every row it
+        stored, not just its deletes -- so merge raises ValueError
+        when the staged write holds a bucket outside the list, before
+        the manifest is written (the version does not move).  (A
+        touched key that is neither stored nor re-upserted may
         legitimately be absent: its bucket has nothing to delete or
         add, and skipping its read+rewrite is the point.)"""
         v = self.current_version(name)
@@ -1394,6 +1399,14 @@ class ParquetTableStore:
                     for entry in os.listdir(stage_dir)
                     if entry.startswith("__part=")
                 }
+                stray = set(written) - {str(b) for b in touched}
+                if stray:
+                    shutil.rmtree(stage_dir, ignore_errors=True)
+                    raise ValueError(
+                        f"merge into {name!r}: upsert rows hash into buckets "
+                        f"{sorted(stray, key=int)} missing from touched_buckets; "
+                        "committing would drop those buckets' stored rows"
+                    )
                 partitions = dict(m["partitions"])
                 for b in touched:
                     partitions.pop(str(b), None)  # bucket may have emptied

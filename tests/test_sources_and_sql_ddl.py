@@ -86,9 +86,12 @@ def test_load_table_events_ts_dtype_adaptive(spark, tmp_path):
     spark.createDataFrame([(1, t0, 7, "click", 1.0, "{}")], cols).write.parquet(
         os.path.join(d_us, "events.parquet")
     )
-    got = load_table(spark, d_us, "events")
-    assert dict(got.dtypes)["ts"] == "timestamp"
-    assert got.first()["ts"] == t0
+    # each case twice: the second read comes from the session's schema
+    # cache and must normalize (or fail) exactly as the first did
+    for _ in range(2):
+        got = load_table(spark, d_us, "events")
+        assert dict(got.dtypes)["ts"] == "timestamp"
+        assert got.first()["ts"] == t0
 
     # nanos-as-long world (older drops): same instant, floor-truncated
     d_ns = str(tmp_path / "ns")
@@ -98,8 +101,10 @@ def test_load_table_events_ts_dtype_adaptive(spark, tmp_path):
         [(1, ns, 7, "click", 1.0, "{}")],
         "event_id long, ts long, user_id long, event_type string, value double, props string",
     ).write.parquet(os.path.join(d_ns, "events.parquet"))
-    got_ns = load_table(spark, d_ns, "events")
-    assert dict(got_ns.dtypes)["ts"] == "timestamp"
+    for _ in range(2):
+        got_ns = load_table(spark, d_ns, "events")
+        assert dict(got_ns.dtypes)["ts"] == "timestamp"
+        assert got_ns.first()["ts"] == t0
 
     # unrecognized dtype (string): loud failure, not a mid-plan crash
     d_bad = str(tmp_path / "bad")
@@ -107,8 +112,72 @@ def test_load_table_events_ts_dtype_adaptive(spark, tmp_path):
     spark.createDataFrame(
         [(1, "2024-01-01", 7, "click", 1.0, "{}")], cols
     ).write.parquet(os.path.join(d_bad, "events.parquet"))
-    with pytest.raises(TypeError, match="events.ts loaded as"):
-        load_table(spark, d_bad, "events")
+    for _ in range(2):
+        with pytest.raises(TypeError, match="events.ts loaded as 'string'"):
+            load_table(spark, d_bad, "events")
+
+
+def _jobs_run(spark):
+    return spark.sparkContext._jsc.sc().dagScheduler().numTotalJobs()
+
+
+def test_load_table_reuses_schema_until_rewritten(spark, tmp_path):
+    """The first read of a table infers its schema (one job); a second
+    read of the unchanged table reuses it and runs no job. Rewriting the
+    directory table at the same path is noticed: a renamed column raises
+    again, an added column shows up."""
+    from sfguide_intro_to_cdc_using_snowflake_postgres_connector_dynamic_tables_spark.sources.testdata import (
+        load_table,
+    )
+
+    sf_dir = str(tmp_path / "sf")
+    path = os.path.join(sf_dir, "region.parquet")
+    spark.createDataFrame([(0, "AFRICA")], "r_regionkey long, r_name string").write.parquet(path)
+    first = load_table(spark, sf_dir, "region")
+    j0 = _jobs_run(spark)
+    second = load_table(spark, sf_dir, "region")
+    assert _jobs_run(spark) == j0
+    assert second.schema == first.schema
+    assert second.collect() == first.collect()
+
+    spark.createDataFrame([(0, "AFRICA")], "regionkey long, r_name string").write.mode(
+        "overwrite"
+    ).parquet(path)
+    for _ in range(2):  # a failing table is not cached: it raises every read
+        with pytest.raises(TypeError, match="testdata format changed.*r_regionkey"):
+            load_table(spark, sf_dir, "region")
+
+    spark.createDataFrame(
+        [(0, "AFRICA", "c")], "r_regionkey long, r_name string, r_comment string"
+    ).write.mode("overwrite").parquet(path)
+    for _ in range(2):
+        got = load_table(spark, sf_dir, "region")
+        assert got.columns == ["r_regionkey", "r_name", "r_comment"]
+        assert got.first()["r_comment"] == "c"
+
+
+def test_load_table_single_file_rewrite_is_reinferred(spark, tmp_path):
+    """A single-file table (the testdata layout) replaced in place gets
+    a new fingerprint, so its new schema is inferred, not the cached one."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from sfguide_intro_to_cdc_using_snowflake_postgres_connector_dynamic_tables_spark.sources.testdata import (
+        load_table,
+    )
+
+    path = str(tmp_path / "nation.parquet")
+    cols = {"n_nationkey": [1], "n_name": ["FRANCE"], "n_regionkey": [3]}
+    pq.write_table(pa.table(cols), path)
+    assert load_table(spark, str(tmp_path), "nation").columns == list(cols)
+    j0 = _jobs_run(spark)
+    load_table(spark, str(tmp_path), "nation")
+    assert _jobs_run(spark) == j0
+
+    pq.write_table(pa.table({**cols, "n_comment": ["x"]}), path)
+    got = load_table(spark, str(tmp_path), "nation")
+    assert got.columns == [*cols, "n_comment"]
+    assert got.first()["n_comment"] == "x"
 
 
 def test_seeded_random_sample(spark):

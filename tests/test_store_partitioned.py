@@ -108,6 +108,33 @@ def test_merge_can_empty_a_bucket(spark, tmp_path):
     assert store.read(spark, "t").count() == 40 - n_b0
 
 
+def test_merge_rejects_upsert_bucket_missing_from_touched(spark, tmp_path):
+    """Fault injection on the touched_buckets contract: an upsert whose
+    bucket is left out of the list would repoint that bucket to the
+    staged row alone, dropping its stored rows. merge must raise before
+    the manifest moves, leaving the version and the contents as they
+    were."""
+    store = ParquetTableStore(str(tmp_path / "s"))
+    df = spark.range(40).select(F.col("id").alias("k"), F.lit("old").alias("v"))
+    store.overwrite("t", df, partition_key="k", n_buckets=4)
+    v0 = store.current_version("t")
+    before = _rows(store.read(spark, "t"))
+
+    upserts = spark.createDataFrame([(7, "new")], "k long, v string")
+    b7 = upserts.select(ParquetTableStore.bucket_expr("k", 4)).first()[0]
+    other = (b7 + 1) % 4  # a real bucket, but not the upsert's
+    with pytest.raises(ValueError, match=rf"buckets \['{b7}'\] missing from touched_buckets"):
+        store.merge(spark, "t", upserts, upserts.select("k"), touched_buckets=[other])
+
+    assert store.current_version("t") == v0
+    assert _rows(store.read(spark, "t")) == before
+    assert not [e for e in os.listdir(os.path.join(store.root, "t")) if e.startswith(f"w{v0 + 1}-")]
+    # the claim was released too: a correct retry commits
+    assert store.merge(spark, "t", upserts, upserts.select("k"), touched_buckets=[b7]) == v0 + 1
+    got = {r["k"]: r["v"] for r in store.read(spark, "t").collect()}
+    assert got[7] == "new" and len(got) == 40
+
+
 def test_empty_partitioned_table_keeps_schema(spark, tmp_path):
     store = ParquetTableStore(str(tmp_path / "s"))
     df = spark.range(5).select(F.col("id").alias("k"), F.lit("x").alias("v"))
