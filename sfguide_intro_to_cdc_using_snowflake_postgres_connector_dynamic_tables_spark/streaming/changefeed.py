@@ -752,24 +752,52 @@ class CDCPipeline:
         envelope = cached = envelope.cache()
         deltas: dict[str, DataFrame] = {}
         try:
-            # ONE metadata job per batch: the affected table set AND the
+            # ONE metadata job per batch: the affected table set, the
             # batch's op='S' schema-change rows (collect_list drops the
-            # NULLs non-DDL rows produce; DDL events are rare and tiny).
+            # NULLs non-DDL rows produce; DDL events are rare and tiny),
+            # AND each partitioned table's touched bucket ids, so its
+            # merge skips its own bucket-id collect.  The buckets hash
+            # the RAW batch keys (a superset of the upsert keys, which
+            # is merge's touched_buckets contract), each table's key
+            # parsed in its own branch under its own schema -- folding
+            # keys of different types into one column first would cast
+            # and re-hash them.  A DDL batch does not use them: a key
+            # widening changes the key's type, and so its hash.
             # DDL applies first -- it sits in the READY set, so a DDL
             # inside an open transaction stays deferred with its data --
             # widening runtime schemas in lsn order before the batch's
             # data rows are parsed under them.
+            bucket_of = F.lit(None).cast("int")
+            for table in self._apply_order:
+                spec = self.store.partition_spec(table)
+                if not spec:
+                    continue
+                key, n_buckets = spec
+                bucket_of = F.when(
+                    (F.col("table_name") == table)
+                    & (F.col("op") != SCHEMA_CHANGE_OP),
+                    ParquetTableStore.bucket_expr(
+                        F.from_json("after_json", self.table_schema(table))[key],
+                        n_buckets,
+                    ),
+                ).otherwise(bucket_of)
             meta = envelope.groupBy("table_name").agg(
                 F.collect_list(
                     F.when(
                         F.col("op") == SCHEMA_CHANGE_OP,
                         F.struct("lsn", "after_json"),
                     )
-                ).alias("ddl")
+                ).alias("ddl"),
+                F.collect_set(bucket_of).alias("buckets"),
             ).collect()
             ddl_rows = sorted(
                 ((r["table_name"], d["lsn"], d["after_json"]) for r in meta for d in r["ddl"]),
                 key=lambda t: t[1],
+            )
+            touched_buckets = (
+                {}
+                if ddl_rows
+                else {r["table_name"]: r["buckets"] for r in meta if r["buckets"]}
             )
             if ddl_rows:
                 widened: dict[str, bool] = {}
@@ -792,14 +820,22 @@ class CDCPipeline:
             ordered = [t for t in self._apply_order if t in tables]
 
             def _apply_one(table: str) -> None:
+                # not cached: a narrow from_json over the cached
+                # envelope, and each cache would run its own jobs
                 changes = parse_table_changes(
                     envelope, table, self.table_schema(table)
-                ).cache()
+                )
                 key = self.primary_keys[table]
                 if self.store.exists(table) and self.store.partition_spec(table):
                     # partition-pruned MERGE: only touched buckets rewrite
                     upserts, touched = split_changes(changes, key)
-                    self.store.merge(self.spark, table, upserts, touched)
+                    self.store.merge(
+                        self.spark,
+                        table,
+                        upserts,
+                        touched,
+                        touched_buckets=touched_buckets.get(table),
+                    )
                 else:
                     current = (
                         self.store.read(self.spark, table) if self.store.exists(table) else None
@@ -843,10 +879,6 @@ class CDCPipeline:
             cached.unpersist()
             if pre_split is not None:
                 pre_split.unpersist()
-            # release per-table delta caches once hooks have consumed
-            # them -- long-running streams must not accumulate blocks
-            for d in deltas.values():
-                d.unpersist()
         return deltas
 
     def on_batch_applied(self, hook) -> None:

@@ -50,7 +50,9 @@ produces -- 'U' rows for every affected view key still present after
 the merge, 'D' rows (payload NULL) for affected keys that vanished --
 and ``refresh_dag`` walks the registry in dependency order feeding
 each view's emitted delta downstream, so a delta cascades through the
-chain with every level doing O(|its affected set|) work.  Old-group
+chain with every level doing O(|its affected set|) work.  Only views
+that another registered view reads emit a delta; a leaf view's would
+go unread, so it is never built.  Old-group
 resolution downstream comes free from the versioned store:
 ``read_previous`` of an upstream view is exactly its pre-tick
 snapshot -- which holds under crash-retries because a refresh whose
@@ -322,8 +324,17 @@ class DynamicTableManager:
             return None
         # no .distinct(): duplicates in the key set don't change semi/
         # anti-join semantics, and dropping it removes a shuffle; the
-        # broadcast carries a few duplicate keys instead
-        affected = affected.cache()
+        # broadcast carries a few duplicate keys instead.  Cached only
+        # when building it scans a stored table (dim probes, the
+        # previous-snapshot group lookup): a fact-delta-only key set is
+        # a narrow projection of the caller's delta, cheaper to re-derive
+        # at each use than to cache in its own jobs.
+        scans_store = bool(dim_probes) or (
+            fact_delta is not None and dt.group_col is not None
+        )
+        if scans_store:
+            affected = affected.cache()
+        recomputed = None
         try:
             # 2. recompute the defining query over affected fact rows
             # (row views) / whole affected groups (aggregate views)
@@ -447,8 +458,10 @@ class DynamicTableManager:
             )
             return upserts.unionByName(dels)
         finally:
-            affected.unpersist()
-            recomputed.unpersist()
+            if scans_store:
+                affected.unpersist()
+            if recomputed is not None:
+                recomputed.unpersist()
 
     @staticmethod
     def _same_rows(
@@ -550,12 +563,17 @@ class DynamicTableManager:
 
         A level that full-refreshes (first materialization, missing
         previous version, ``refresh_mode='full'``) emits no delta, and
-        every transitive downstream full-refreshes this tick.  Returns
-        the per-view emitted deltas (cached; valid until the next tick
-        moves the store)."""
+        every transitive downstream full-refreshes this tick.  Only a
+        view that another registered view reads (as its fact or a dim)
+        emits a delta -- nothing would read the others' -- so a flat
+        registry returns ``{}``.  Returns those per-view emitted deltas
+        (cached; valid until the next tick moves the store)."""
         all_deltas = dict(deltas)
         forced_full: set[str] = set()
         emitted: dict[str, DataFrame] = {}
+        read_by_views = {
+            u for dt in self.registry.values() for u in self._upstream_views(dt)
+        }
         for name in self.refresh_order():
             dt = self.registry[name]
             if dt.refresh_mode != "incremental" or any(
@@ -564,7 +582,9 @@ class DynamicTableManager:
                 self.full_refresh(name)
                 forced_full.add(name)
                 continue
-            out = self.incremental_refresh(name, all_deltas, emit_delta=True, lsn=lsn)
+            out = self.incremental_refresh(
+                name, all_deltas, emit_delta=name in read_by_views, lsn=lsn
+            )
             if out is FULL_REFRESH:
                 forced_full.add(name)
             elif out is not None:

@@ -890,10 +890,12 @@ class ParquetTableStore:
     # -- writes --------------------------------------------------------------
 
     @staticmethod
-    def bucket_expr(key: str, n_buckets: int):
+    def bucket_expr(key, n_buckets: int):
         """The bucket id of a key value: pmod(murmur3(key), B).  Stable
-        across sessions, so bucket membership never migrates."""
-        return F.pmod(F.hash(F.col(key)), F.lit(n_buckets))
+        across sessions, so bucket membership never migrates.  ``key``
+        is a column name or a Column; the hash depends on the key's
+        type, so an int and a bigint key land in different buckets."""
+        return F.pmod(F.hash(key), F.lit(n_buckets))
 
     def overwrite(
         self,
@@ -1324,7 +1326,9 @@ class ParquetTableStore:
 
         ``touched_buckets``: bucket ids a caller already computed in
         an action it ran anyway (the dynamic-table refresh's no-op
-        stats pass), skipping this method's own bucket-id collect.
+        stats pass; the CDC pipeline's per-batch meta aggregate over
+        the raw batch keys), skipping this method's own bucket-id
+        collect.
         CONTRACT: the list must contain every bucket of an upsert
         row's key AND every bucket where a ``touched_keys`` key is
         currently STORED.  Buckets outside it are carried over

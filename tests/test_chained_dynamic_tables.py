@@ -381,6 +381,48 @@ def test_upstream_full_refresh_forces_downstream_full(spark, tmp_path):
     assert _canon(mgr.read("band_counts")) == _canon(_band_view({"customer_spend": level1}))
 
 
+def test_flat_registry_emits_no_deltas(spark, tmp_path):
+    """``refresh_dag`` builds a view's change batch only when another
+    registered view reads that view: on a flat registry it returns
+    ``{}``, and every view still refreshes incrementally to exactly
+    a full recompute."""
+    customers = fixtures.make_customers(10, seed=5)
+    merchants = fixtures.make_merchants(seed=5)
+    products = fixtures.make_products(seed=5)
+    tx = fixtures.make_transactions(customers, products, merchants, n=40,
+                                    orphan_frac=0.0, seed=5)
+    store = ParquetTableStore(str(tmp_path / "store"))
+    p = CDCPipeline(spark, store)
+    p.bootstrap({
+        "customers": spark.createDataFrame(customers, CUSTOMERS_SCHEMA),
+        "transactions": spark.createDataFrame(tx, TRANSACTIONS_SCHEMA),
+    })
+
+    def purchases(t):
+        return t["transactions"].select("transaction_id", "customer_id", "total_price")
+
+    mgr = DynamicTableManager(spark, store)
+    mgr.create(DynamicTable("customer_spend", _spend_view, fact_table="transactions",
+                            fact_key="transaction_id", view_key="customer_id",
+                            group_col="customer_id"))
+    mgr.create(DynamicTable("purchases", purchases, fact_table="transactions",
+                            fact_key="transaction_id", view_key="transaction_id"))
+    rows = [
+        ("U", 9200, None, "transactions",
+         json.dumps(_tx_row(tx[0], total_price=1234.5), default=str)),
+        ("D", 9201, None, "transactions", json.dumps({"transaction_id": tx[1][0]})),
+        ("I", 9202, None, "transactions",
+         json.dumps(_tx_row(tx[2], transaction_id="TXNEW"), default=str)),
+    ]
+    deltas = p.apply_envelope_batch(spark.createDataFrame(rows, FEED_SCHEMA))
+    n_log = len(mgr.refresh_log)
+    assert mgr.refresh_dag(deltas, lsn=9202) == {}
+    assert [r[1] for r in mgr.refresh_log[n_log:]] == ["INCREMENTAL", "INCREMENTAL"]
+    base = {"transactions": store.read(spark, "transactions")}
+    assert _canon(mgr.read("customer_spend")) == _canon(_spend_view(base))
+    assert _canon(mgr.read("purchases")) == _canon(purchases(base))
+
+
 def test_unsatisfiable_target_lag_rejected(spark, tmp_path):
     """A downstream view declaring a tighter target lag than its
     upstream is unsatisfiable -- create() must reject it."""

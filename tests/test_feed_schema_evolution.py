@@ -241,6 +241,38 @@ def test_type_widening_int_to_bigint(spark, tmp_path, partitioned):
     assert out2.filter(F.col("customer_id") == 4).count() == 1
 
 
+def test_key_widening_with_data_on_partitioned_table(spark, tmp_path):
+    """Widening the partition KEY int -> bigint changes every key's
+    hash, so the batch's bucket ids hashed under the pre-DDL schema
+    would name the wrong buckets: a batch carrying DDL must fall back
+    to the merge's own bucket collect.  The same batch's inserts,
+    update and delete must leave the partitioned replica equal to the
+    unpartitioned one."""
+    batch = [
+        {"op": "S", "lsn": 10, "table": "customers", "row": None,
+         "after_json": json.dumps(
+             {"alter_columns": [{"name": "customer_id", "type": "bigint"}]})},
+        {"op": "I", "lsn": 11, "table": "customers",
+         "row": _customer_row(3_000_000_000)},
+        {"op": "I", "lsn": 12, "table": "customers", "row": _customer_row(5)},
+        {"op": "U", "lsn": 13, "table": "customers",
+         "row": _customer_row(2, {"age": 41})},
+        {"op": "D", "lsn": 14, "table": "customers",
+         "row": {"customer_id": 3}},
+    ]
+    got = {}
+    for partitioned in (False, True):
+        p, store = _seeded_pipeline(spark, tmp_path / str(partitioned), partitioned)
+        p.apply_envelope_batch(_envelope(spark, batch))
+        out = store.read(spark, "customers")
+        assert dict(out.dtypes)["customer_id"] == "bigint"
+        got[partitioned] = sorted(
+            tuple(r) for r in out.select(*sorted(out.columns)).collect()
+        )
+    assert got[True] == got[False]
+    assert {r[1] for r in got[True]} == {1, 2, 5, 3_000_000_000}
+
+
 def test_widening_persists_across_restart(spark, tmp_path):
     p, store = _seeded_pipeline(spark, tmp_path)
     p.apply_envelope_batch(_envelope(spark, [

@@ -275,6 +275,86 @@ def test_cdc_pipeline_partitioned_matches_unpartitioned(spark, tmp_path):
         rewritten = [b for b in before if after.get(b) != before[b]]
         assert len(rewritten) <= 2  # 2 keys -> at most 2 buckets rewritten
         assert len(carried) >= len(before) - 2
+    # delete-only bucket: one 'D' row in a bucket no upsert of its
+    # batch hashes into.  Merge's stray-bucket guard sees only upsert
+    # buckets, so a bucket set that missed the delete's bucket would
+    # commit and silently keep the deleted row.
+    bucket_of = {
+        r["transaction_id"]: r["b"]
+        for r in part_store.read(spark, "transactions")
+        .select(
+            "transaction_id",
+            ParquetTableStore.bucket_expr("transaction_id", 8).alias("b"),
+        )
+        .collect()
+    }
+    upserted = [row for _, _, row in small["transactions"]]
+    upsert_buckets = {bucket_of[r["transaction_id"]] for r in upserted}
+    gone = next(
+        k for k, b in sorted(bucket_of.items()) if b not in upsert_buckets
+    )
+    mixed = {
+        "transactions": [
+            ("U", 20_000 + i, {**r, "quantity": 7}) for i, r in enumerate(upserted)
+        ]
+        + [("D", 20_010, {"transaction_id": gone})]
+    }
+    part.apply_envelope_batch(_envelope_df(spark, mixed), batch_id=100)
+    plain.apply_envelope_batch(_envelope_df(spark, mixed), batch_id=100)
+    stored = part_store.read(spark, "transactions")
+    assert stored.filter(F.col("transaction_id") == gone).count() == 0
+    assert _rows(stored) == _rows(plain_store.read(spark, "transactions"))
+    assert _rows(mgr.read("customer_purchase_summary")) == _rows(
+        plain_mgr.read("customer_purchase_summary")
+    )
+
+
+def test_insert_only_tick_job_count_is_pinned(spark, tmp_path):
+    """An insert-only tick on a partitioned fact with an attached
+    partitioned view runs a fixed, small number of Spark jobs: the fact
+    merge's bucket ids ride the batch's meta aggregate, the envelope is
+    the only cached copy of the delta, and a view nothing reads emits no
+    change batch.  Counted by the DAGScheduler job-id watermark on two
+    warm ticks, so a fold that comes undone shows up here."""
+    customers = fixtures.make_customers(40, seed=7)
+    merchants = fixtures.make_merchants(seed=7)
+    products = fixtures.make_products(seed=7)
+    transactions = fixtures.make_transactions(
+        customers, products, merchants, n=200, seed=7
+    )
+    store = ParquetTableStore(str(tmp_path / "s"))
+    pipeline = CDCPipeline(spark, store, partition_spec={"transactions": 4})
+    pipeline.bootstrap(
+        {
+            "customers": spark.createDataFrame(customers, CUSTOMERS_SCHEMA),
+            "merchants": spark.createDataFrame(merchants, MERCHANTS_SCHEMA),
+            "products": spark.createDataFrame(products, PRODUCTS_SCHEMA),
+            "transactions": spark.createDataFrame(transactions, TRANSACTIONS_SCHEMA),
+        }
+    )
+    mgr = DynamicTableManager(spark, store)
+    mgr.create(DynamicTable(**SUMMARY_VIEW, partition_buckets=4))
+    mgr.attach(pipeline)
+    inserts_only = [
+        b
+        for b in fixtures.change_log(
+            customers, products, merchants, batches=6, rows_per_batch=40, seed=7
+        )
+        if all(not rows for t, rows in b.items() if t != "transactions")
+        and len(b["transactions"]) == 40
+    ]
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    counts = []
+    for i, batch in enumerate(inserts_only[:3]):
+        lo = dag.numTotalJobs()
+        pipeline.apply_envelope_batch(_envelope_df(spark, batch), batch_id=i)
+        counts.append(dag.numTotalJobs() - lo)
+    warm = counts[1:]  # the first tick also pays one-time planning work
+    assert warm[0] == warm[1] <= 17, counts
+    expected = SUMMARY_VIEW["defining_fn"](
+        {t: store.read(spark, t) for t in ("transactions", "customers", "products", "merchants")}
+    )
+    assert _rows(mgr.read("customer_purchase_summary")) == _rows(expected)
 
 
 def test_rebucket_preserves_rows_and_enables_merge(spark, tmp_path):

@@ -222,10 +222,10 @@ def test_crash_between_merges_keeps_group_consistent(spark, pipeline):
     real_merge = store.merge
     calls = {"n": 0}
 
-    def crashing_merge(spark_, name, upserts, touched):
+    def crashing_merge(spark_, name, upserts, touched, **kw):
         if name == "transactions":
             raise RuntimeError("injected crash before transactions merge")
-        return real_merge(spark_, name, upserts, touched)
+        return real_merge(spark_, name, upserts, touched, **kw)
 
     store.merge = crashing_merge
     try:
