@@ -6,7 +6,14 @@ local[$SPARK_GRAFT_CPUS] and prints ONE JSON line.
 Each query is forced to full materialization with a cheap action
 (count of a 1-column projection would let Catalyst prune the work, so
 we use ``df.write.format("noop")`` which executes the complete plan
-without sink I/O).
+without sink I/O).  Entries run in ``__spark_entry__.queries()`` order,
+the gate order; the cold pass bills each plan shape's
+one-time compile to the first entry in that order that uses it.
+
+Two side drives print their own JSON line instead:
+``--scaling-cores`` (data-bound subset on replicated inputs; run at two
+``SPARK_GRAFT_CPUS`` settings to read core scaling) and
+``--soak-media`` (media front-door ingest soak and probe-I/O table).
 """
 
 from __future__ import annotations
@@ -21,6 +28,7 @@ import time
 REPO = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, REPO)
 
+import __spark_entry__  # noqa: E402
 from sfguide_intro_to_cdc_using_snowflake_postgres_connector_dynamic_tables_spark.plans.catalog import (  # noqa: E402
     CATALOG,
 )
@@ -37,14 +45,10 @@ def _setup_cdc(
     batches: int,
     rows_per_batch: int,
     buckets: int | None,
-    zone_cols: dict[str, list[str]] | None = None,
-    scd2_tables: list[str] | None = None,
 ):
-    """Shared scaffolding for the CDC drives: seed fixtures, bootstrap
-    the store (optionally hash-partitioned), register + attach the
-    maintained view, and pre-build the envelope batches.  ONE
-    definition so the bench and the soak can never silently drive
-    different pipelines."""
+    """Scaffolding for the CDC drive: seed fixtures, bootstrap the
+    store (optionally hash-partitioned), register + attach the
+    maintained view, and pre-build the envelope batches."""
     import json as _json
 
     from sfguide_intro_to_cdc_using_snowflake_postgres_connector_dynamic_tables_spark.plans.purchase_summary import (
@@ -81,13 +85,7 @@ def _setup_cdc(
     root = f"{tmp}/store"
     store = ParquetTableStore(root)
     spec = {"transactions": buckets} if buckets else None
-    p = CDCPipeline(spark, store, partition_spec=spec, zone_spec=zone_cols)
-    if scd2_tables:
-        from sfguide_intro_to_cdc_using_snowflake_postgres_connector_dynamic_tables_spark.streaming.scd2 import (
-            SCD2Tracker,
-        )
-
-        tracker = SCD2Tracker(p, tables=scd2_tables)
+    p = CDCPipeline(spark, store, partition_spec=spec)
     snap = {
         "customers": spark.createDataFrame(customers, CUSTOMERS_SCHEMA),
         "merchants": spark.createDataFrame(merchants, MERCHANTS_SCHEMA),
@@ -95,8 +93,6 @@ def _setup_cdc(
         "transactions": spark.createDataFrame(transactions, TRANSACTIONS_SCHEMA),
     }
     p.bootstrap(snap)
-    if scd2_tables:
-        tracker.seed(snap, snapshot_lsn=0)
     mgr = DynamicTableManager(spark, store)
     mgr.create(
         DynamicTable(
@@ -176,411 +172,6 @@ def _bench_cdc(
         for i, env in enumerate(envelopes):
             p.apply_envelope_batch(env, batch_id=i)
         return time.perf_counter() - t0
-
-
-def _soak_cdc(
-    spark,
-    batches: int = 50,
-    rows_per_batch: int = 2000,
-    n_customers: int = 2000,
-    base_transactions: int = 20000,
-    buckets: int = 64,
-    zone_cols: dict[str, list[str]] | None = None,
-    scd2_tables: list[str] | None = None,
-) -> dict:
-    """10x-volume CDC soak (VERDICT r4 item 8): drive ``batches`` x
-    ``rows_per_batch`` change batches through the partitioned store +
-    incremental view refresh, and *measure* (not assert) the
-    O(delta-buckets) write claim: bytes written per refresh is the
-    file-set delta of the store directory across each batch, so a
-    full-rewrite regression shows up as per-refresh bytes ~= total
-    store bytes instead of ~= delta-bucket bytes.
-
-    Returns sustained rows/min, per-batch lag percentiles and the
-    write-amplification ratio (bytes written per refresh / live store
-    bytes)."""
-    import os as _os
-    import statistics
-    import tempfile
-
-    def _snapshot_files(root: str) -> dict[str, tuple[int, float]]:
-        # (size, mtime) so files REPLACED in place at the same path
-        # (version pointer, offset file) count as writes too -- a
-        # new-paths-only diff would undercount any future in-place
-        # compaction or append path
-        out: dict[str, tuple[int, float]] = {}
-        for dirpath, _dirs, files in _os.walk(root):
-            for f in files:
-                p = _os.path.join(dirpath, f)
-                try:
-                    st = _os.stat(p)
-                    out[p] = (st.st_size, st.st_mtime)
-                except OSError:
-                    pass
-        return out
-
-    with tempfile.TemporaryDirectory() as tmp:
-        p, envelopes, root = _setup_cdc(
-            spark,
-            tmp,
-            n_customers=n_customers,
-            n_transactions=base_transactions,
-            batches=batches,
-            rows_per_batch=rows_per_batch,
-            buckets=buckets,
-            zone_cols=zone_cols,
-            scd2_tables=scd2_tables,
-        )
-        lags: list[float] = []
-        bytes_per_refresh: list[int] = []
-        history_bytes: list[int] = []
-        prune_keep: list[int] = []
-        before = _snapshot_files(root)
-        t0 = time.perf_counter()
-        for i, env in enumerate(envelopes):
-            tb = time.perf_counter()
-            p.apply_envelope_batch(env, batch_id=i)
-            lags.append(time.perf_counter() - tb)
-            after = _snapshot_files(root)
-            changed = {
-                path: meta
-                for path, meta in after.items()
-                if before.get(path) != meta
-            }
-            bytes_per_refresh.append(sum(m[0] for m in changed.values()))
-            if scd2_tables:
-                # history-write column of the combined-soak claim: the
-                # SCD2 fold must also stay O(touched buckets)
-                history_bytes.append(
-                    sum(
-                        m[0]
-                        for path, m in changed.items()
-                        if "__history" in path
-                    )
-                )
-            if zone_cols:
-                # prune-hit column: how many fact buckets a 1-day
-                # zone-mapped date probe would scan after this merge
-                # (zones must stay selective as merges fold in)
-                import datetime as _dt
-
-                m = p.store._read_manifest(
-                    "transactions", p.store.current_version("transactions")
-                )
-                probe = _dt.date(2024, 10, 11)
-                prune_keep.append(
-                    len(
-                        p.store._zone_pruned_buckets(
-                            m, "transaction_date", probe, probe
-                        )
-                    )
-                )
-            before = after
-        elapsed = time.perf_counter() - t0
-        post_optimize: dict = {}
-        if zone_cols and "transactions" in zone_cols:
-            # the maintenance answer to the degrading prune-hit column:
-            # date-cluster each bucket (file-level zone stats) and
-            # re-probe -- the r9 finding was that current-date rows land
-            # in every hash bucket, so bucket-level stats stop pruning;
-            # file-level stats restore selectivity without touching the
-            # merge path (VERDICT r9 item 7)
-            import datetime as _dt
-
-            # size files to ~1/6 of a bucket so clustering is visible at
-            # soak scale (at 100 TB the analogous knob is row-group /
-            # file size in bytes)
-            n_tx = p.store.read(spark, "transactions").count()
-            per_file = max(32, n_tx // buckets // 6)
-            p.store.optimize(
-                spark,
-                "transactions",
-                zorder_cols=zone_cols["transactions"],
-                writer_options={"maxRecordsPerFile": str(per_file)},
-            )
-            probe = _dt.date(2024, 10, 11)
-            plan = p.store.prune_plan(
-                "transactions", "transaction_date", probe, probe
-            )
-            post_optimize = {
-                "post_optimize_files_total": plan["files_total"],
-                "post_optimize_files_scanned": plan["files_kept"],
-            }
-        live_bytes = sum(m[0] for m in before.values())
-        n_rows = batches * rows_per_batch
-        lags_sorted = sorted(lags)
-        return {
-            "batches": batches,
-            "rows_per_batch": rows_per_batch,
-            "buckets": buckets,
-            "elapsed_sec": round(elapsed, 2),
-            "rows_per_min": round(n_rows / elapsed * 60.0),
-            "lag_p50_sec": round(statistics.median(lags), 2),
-            "lag_p95_sec": round(lags_sorted[int(0.95 * (len(lags) - 1))], 2),
-            "lag_max_sec": round(max(lags), 2),
-            "bytes_per_refresh_avg": int(sum(bytes_per_refresh) / len(bytes_per_refresh)),
-            "bytes_per_refresh_max": max(bytes_per_refresh),
-            "live_store_bytes": live_bytes,
-            "write_amp_vs_store": round(
-                sum(bytes_per_refresh) / len(bytes_per_refresh) / max(live_bytes, 1), 4
-            ),
-            **(
-                {
-                    "history_bytes_per_refresh_avg": int(
-                        sum(history_bytes) / len(history_bytes)
-                    ),
-                    "history_bytes_per_refresh_max": max(history_bytes),
-                    "history_live_bytes": sum(
-                        m[0]
-                        for path, m in before.items()
-                        if "__history" in path
-                    ),
-                }
-                if history_bytes
-                else {}
-            ),
-            **(
-                {
-                    "prune_buckets_total": buckets,
-                    "prune_buckets_scanned_avg": round(
-                        sum(prune_keep) / len(prune_keep), 1
-                    ),
-                    "prune_buckets_scanned_max": max(prune_keep),
-                }
-                if prune_keep
-                else {}
-            ),
-            **post_optimize,
-        }
-
-
-def _soak_split(
-    spark,
-    n_docs: int = 4000,
-    n_rounds: int = 16,
-    seed: int = 13,
-) -> dict:
-    """Incremental leakage-safe split soak: docs arrive in n_rounds
-    random batches, near-dup families straddle batches (so cluster
-    merges across already-assigned splits occur and quarantine
-    accumulates), and split_health is sampled after every increment.
-    Ends with an epoch re-split to demonstrate the drain.  Driver
-    state is O(docs) here only because the soak generates its corpus
-    in-process; the operators themselves never collect the corpus."""
-    import itertools
-    import random
-
-    from sfguide_intro_to_cdc_using_snowflake_postgres_connector_dynamic_tables_spark.operators.corpus import (
-        leakage_safe_split_increment,
-        leakage_safe_split_state,
-        resplit_epoch,
-        split_health,
-    )
-
-    rng = random.Random(seed)
-    ids = list(range(n_docs))
-    rng.shuffle(ids)
-    fams, i = [], 0
-    while i < len(ids):
-        size = rng.randint(1, 6)
-        fams.append(sorted(ids[i : i + size]))
-        i += size
-    all_pairs = [
-        (a, b) for f in fams for a, b in itertools.combinations(f, 2)
-    ]
-    order = ids[:]
-    rng.shuffle(order)
-    cuts = sorted(rng.sample(range(1, len(order)), n_rounds - 1))
-    batches = [order[a:b] for a, b in zip([0] + cuts, cuts + [len(order)])]
-
-    def _pairs_df(pairs):
-        return spark.createDataFrame(
-            pairs or [(None, None)], "doc_a long, doc_b long"
-        ).filter("doc_a IS NOT NULL")
-
-    ingested = set(batches[0])
-    delivered = [
-        (a, b) for a, b in all_pairs if a in ingested and b in ingested
-    ]
-    state = leakage_safe_split_state(
-        spark.createDataFrame([(d,) for d in sorted(ingested)], ["doc_id"]),
-        _pairs_df(delivered),
-    )
-    curve = []
-    for rnd, batch in enumerate(batches[1:], start=2):
-        new_pairs = [
-            (a, b)
-            for a, b in all_pairs
-            if (a in batch or b in batch)
-            and a in ingested | set(batch)
-            and b in ingested | set(batch)
-        ]
-        t0 = time.perf_counter()
-        state = leakage_safe_split_increment(
-            state,
-            spark.createDataFrame([(d,) for d in batch], ["doc_id"]),
-            _pairs_df(new_pairs),
-        )
-        ingested |= set(batch)
-        delivered += new_pairs
-        h = split_health(state, _pairs_df(delivered))
-        curve.append(
-            {
-                "round": rnd,
-                "docs": h["docs"],
-                "quarantined": h["quarantined"],
-                "quarantine_frac": round(h["quarantine_frac"], 5),
-                "straddling_pairs": h["straddling_pairs"],
-                "resplit_recommended": h["resplit_recommended"],
-                "sec": round(time.perf_counter() - t0, 2),
-            }
-        )
-    t0 = time.perf_counter()
-    fresh = resplit_epoch(
-        spark.createDataFrame([(d,) for d in sorted(ingested)], ["doc_id"]),
-        _pairs_df(delivered),
-        salt="epoch-2",
-    )
-    h2 = split_health(fresh, _pairs_df(delivered))
-    return {
-        "curve": curve,
-        "post_resplit": {
-            "quarantined": h2["quarantined"],
-            "quarantine_frac": h2["quarantine_frac"],
-            "straddling_pairs": h2["straddling_pairs"],
-            "sec": round(time.perf_counter() - t0, 2),
-        },
-    }
-
-
-def _soak_topk(
-    spark,
-    ticks: int = 40,
-    groups: int = 50,
-    k: int = 5,
-    inserts_per_tick: int = 120,
-    deletes_per_tick: int = 30,
-) -> dict:
-    """Steady-state cost of the r13 two-phase saturation commit
-    (VERDICT r13 item 7): ``topk_refresh`` now writes the sat table
-    TWICE per tick (raise-only pass before the buffer, exact pass
-    after) to close the crash-window refill skip.  This soak drives a
-    crash-free I/D mix and measures (a) tick latency with the raise
-    pass timed separately -- 'before the fix' = elapsed minus the
-    raise writes, since that write is the only addition -- and (b) the
-    spurious-refill rate: in a crash-free run the conservative raise
-    pass must never cause a refill on a tick whose delta had no
-    deletes (over-saturation is corrected by the exact pass in the
-    same tick, before the next tick reads it)."""
-    import random
-    import statistics
-    import tempfile
-
-    from pyspark.sql import functions as F  # noqa: F401  (parity w/ siblings)
-    from sfguide_intro_to_cdc_using_snowflake_postgres_connector_dynamic_tables_spark.streaming.cdc_apply import (
-        apply_changes,
-    )
-    from sfguide_intro_to_cdc_using_snowflake_postgres_connector_dynamic_tables_spark.streaming.dynamic_table import (
-        DynamicTableManager,
-    )
-    from sfguide_intro_to_cdc_using_snowflake_postgres_connector_dynamic_tables_spark.streaming.store import (
-        ParquetTableStore,
-    )
-
-    FACT = "id long, grp int, score long"
-    DELTA = "op string, lsn long, id long, grp int, score long"
-    rng = random.Random(14)
-    live: dict[int, tuple[int, int]] = {}
-    next_id = [0]
-
-    def _mk_rows(n):
-        out = []
-        for _ in range(n):
-            i = next_id[0]
-            next_id[0] += 1
-            row = (i, rng.randrange(groups), rng.randrange(1_000_000))
-            live[i] = row[1:]
-            out.append(row)
-        return out
-
-    with tempfile.TemporaryDirectory() as tmp:
-        store = ParquetTableStore(tmp)
-        store.overwrite("fact", spark.createDataFrame(_mk_rows(groups * k * 4), FACT))
-        mgr = DynamicTableManager(spark, store)
-        mgr.create_topk(
-            "best", fact_table="fact", group_col="grp", id_col="id",
-            order_col="score", k=k, buffer_factor=2,
-        )
-
-        # classify per-tick sat writes: first = raise-only, second = exact
-        sat_raise_times: list[float] = []
-        tick_sat_writes = [0]
-        real_overwrite = store.overwrite
-
-        def timed_overwrite(name, df, *a, **kw):
-            t0 = time.perf_counter()
-            out = real_overwrite(name, df, *a, **kw)
-            if name == "best__sat":
-                tick_sat_writes[0] += 1
-                if tick_sat_writes[0] == 1:
-                    sat_raise_times.append(time.perf_counter() - t0)
-            return out
-
-        store.overwrite = timed_overwrite
-
-        lags: list[float] = []
-        refills_total = 0
-        spurious_refill_ticks = 0
-        t_all = time.perf_counter()
-        for tick in range(ticks):
-            rows = [("I", tick * 10_000 + j, *r) for j, r in enumerate(_mk_rows(inserts_per_tick))]
-            has_deletes = tick % 4 != 3  # every 4th tick is insert-only
-            if has_deletes and live:
-                victims = set(rng.sample(sorted(live), min(deletes_per_tick, len(live))))
-                if tick % 5 == 0:
-                    # targeted drain: delete the current best rows of a
-                    # few groups so the buffer drops below k and the
-                    # REFILL path actually exercises (uniform deletes
-                    # almost never hit 2k of one group's top rows)
-                    for gsel in range(tick // 5 % groups, tick // 5 % groups + 3):
-                        top = sorted(
-                            (i for i, (g, _s) in live.items() if g == gsel % groups),
-                            key=lambda i: -live[i][1],
-                        )[: 3 * k]
-                        victims.update(top)
-                for j, vid in enumerate(sorted(victims)):
-                    grp, score = live.pop(vid)
-                    rows.append(("D", tick * 10_000 + 5000 + j, vid, grp, score))
-            delta = spark.createDataFrame(rows, DELTA)
-            tick_sat_writes[0] = 0
-            tb = time.perf_counter()
-            store.overwrite("fact", apply_changes(store.read(spark, "fact"), delta, "id"))
-            n_refill = mgr.topk_refresh("best", {"fact": delta})
-            lags.append(time.perf_counter() - tb)
-            refills_total += n_refill
-            if n_refill and not has_deletes:
-                spurious_refill_ticks += 1
-        elapsed = time.perf_counter() - t_all
-        raise_total = sum(sat_raise_times)
-        lags_sorted = sorted(lags)
-        return {
-            "ticks": ticks,
-            "groups": groups,
-            "k": k,
-            "elapsed_sec": round(elapsed, 2),
-            "ticks_per_sec": round(ticks / elapsed, 3),
-            "tick_p50_sec": round(statistics.median(lags), 3),
-            "tick_p95_sec": round(lags_sorted[int(0.95 * (len(lags) - 1))], 3),
-            "sat_raise_write_p50_sec": round(statistics.median(sat_raise_times), 3),
-            "sat_raise_write_total_sec": round(raise_total, 2),
-            "ticks_per_sec_without_raise_pass": round(
-                ticks / max(elapsed - raise_total, 1e-9), 3
-            ),
-            "raise_pass_overhead_pct": round(100.0 * raise_total / elapsed, 1),
-            "refills_total": refills_total,
-            "spurious_refill_ticks": spurious_refill_ticks,
-            "sat_versions_per_tick": 2,
-        }
 
 
 def _soak_media(
@@ -753,217 +344,6 @@ def _soak_media(
     }
 
 
-def _bench_scaling(spark, sf_dir: str, factors=(1, 2, 4, 8)) -> dict:
-    """Scaling curve: replicate the documents/events tables Nx (new ids,
-    same content) and measure wall time of the corpus/event operators
-    whose OUTPUT stays linear in input (so the measurement is engine
-    scaling, not data-dependent result blowup).  Near-linear growth
-    here is the local[32] evidence for the shuffle-bounded plan shapes
-    claimed in SCALE.md."""
-    from pyspark.sql import functions as F
-
-    from sfguide_intro_to_cdc_using_snowflake_postgres_connector_dynamic_tables_spark.operators import (
-        corpus,
-        dedup,
-    )
-    from sfguide_intro_to_cdc_using_snowflake_postgres_connector_dynamic_tables_spark.operators.funnel import (
-        funnel_counts,
-    )
-    from sfguide_intro_to_cdc_using_snowflake_postgres_connector_dynamic_tables_spark.sources.testdata import (
-        load_table,
-    )
-
-    docs0 = load_table(spark, sf_dir, "documents").select("doc_id", "lang", "text")
-    events0 = load_table(spark, sf_dir, "events").select(
-        "user_id", "ts", "event_type"
-    )
-    out: dict[str, dict[str, float]] = {}
-    for k in factors:
-        reps = spark.range(k).withColumnRenamed("id", "rep")
-        docs = docs0.crossJoin(reps).select(
-            (F.col("doc_id") * k + F.col("rep")).alias("doc_id"), "lang", "text"
-        )
-        events = events0.crossJoin(reps).select(
-            (F.col("user_id") * k + F.col("rep")).alias("user_id"), "ts", "event_type"
-        )
-        docs.write.format("noop").mode("overwrite").save()  # materialize once, warm
-        from sfguide_intro_to_cdc_using_snowflake_postgres_connector_dynamic_tables_spark.operators import (
-            quality_model,
-            training,
-        )
-
-        _clf = {"join": 0.4, "slow": -0.6, "the": -0.1, "scan": 0.2}
-        ops = {
-            "dedup_exact": lambda: dedup.dedup_exact(docs),
-            "bloom_decontaminate": lambda: corpus.bloom_decontaminate(docs),
-            "boilerplate_ratio": lambda: corpus.boilerplate_ratio(docs),
-            "repeated_spans": lambda: dedup.repeated_spans(docs),
-            "funnel": lambda: funnel_counts(events, ["view", "click", "purchase"]),
-            # r11: the classifier scoring fold (zero-shuffle scan) and
-            # the shard shuffle + manifest stats aggregate (the export
-            # write path minus disk)
-            "classifier_fold": lambda: quality_model.linear_token_score(
-                docs, _clf, -0.3
-            ),
-            "shard_shuffle_stats": lambda: training._shard_stats(
-                training.shuffle_shards(docs, n_shards=64)
-            ),
-        }
-        row: dict[str, float] = {}
-        for name, build in ops.items():
-            t0 = time.perf_counter()
-            build().write.format("noop").mode("overwrite").save()
-            row[name] = round(time.perf_counter() - t0, 2)
-        out[f"x{k}"] = row
-    return out
-
-
-def _bench_minhash_scaling(spark, sf_dir: str, factors=(1, 8, 32, 64)) -> dict:
-    """Candidate-inflation audit of the md5-slice MinHash (VERDICT r10
-    item 7): a 5-nibble slice has a 2^20 value space, so as the corpus
-    grows, unrelated docs could increasingly share band keys by
-    min-collision alone -- correctness is safe (exact-Jaccard verify)
-    but candidate volume would creep toward quadratic.
-
-    Setup isolates the false-candidate signal: the documents table is
-    replicated Nx with every replica's tokens PREFIXED by its replica
-    id, so token sets across replicas are DISJOINT -- any cross-replica
-    same-band candidate is a pure hash-space collision.  Within-replica
-    candidates (the real near-dups) scale linearly by construction.
-    Reported per factor and per scheme (slice = one-md5 5-nibble,
-    salted = k independent digests ~ the collision-free reference,
-    wide = two salted digests / 10-nibble slices):
-
-      cand        all distinct same-band pairs
-      cand_x      cross-replica pairs (false candidates)
-      verified    pairs passing exact Jaccard >= 0.5
-      max_bucket  largest band bucket
-    """
-    from pyspark.sql import functions as F
-
-    from sfguide_intro_to_cdc_using_snowflake_postgres_connector_dynamic_tables_spark.operators.dedup import (
-        _minhash_min_exprs,
-        _token_set,
-    )
-    from sfguide_intro_to_cdc_using_snowflake_postgres_connector_dynamic_tables_spark.sources.testdata import (
-        load_table,
-    )
-
-    docs0 = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    tok0 = _token_set(docs0, "text", "doc_id").localCheckpoint()
-    num_hashes, band_size = 6, 2
-    n_bands = num_hashes // band_size
-
-    def exprs_for(scheme: str):
-        if scheme == "slice":
-            return _minhash_min_exprs(num_hashes)
-        if scheme == "wide":
-            return _minhash_min_exprs(num_hashes, wide=True)
-        # salted reference: k fully independent digests (128-bit space,
-        # collisions effectively impossible -- the r9 scheme)
-        return [
-            F.min(F.md5(F.encode(F.concat(F.lit(f"{i}|"), F.col("token")), "UTF-8"))).alias(
-                f"h{i + 1}"
-            )
-            for i in range(num_hashes)
-        ]
-
-    out: dict = {}
-    for k in factors:
-        reps = spark.range(k).withColumnRenamed("id", "rep")
-        tok = (
-            tok0.crossJoin(reps)
-            .select(
-                (F.col("doc_id") * k + F.col("rep")).alias("doc_id"),
-                F.concat(F.col("rep").cast("string"), F.lit("_"), F.col("token")).alias(
-                    "token"
-                ),
-            )
-            .localCheckpoint()
-        )
-        row: dict = {}
-        for scheme in ("slice", "salted", "wide"):
-            t0 = time.perf_counter()
-            # materialize once: bands, the candidate stats, and both
-            # sides of the verify join all read the signature table
-            sig = tok.groupBy("doc_id").agg(
-                *exprs_for(scheme),
-                F.collect_set("token").alias("toks"),
-                F.count(F.lit(1)).alias("n"),
-            ).localCheckpoint()
-            band_exprs = [
-                F.md5(
-                    F.encode(
-                        F.concat(
-                            *[
-                                F.col(f"h{b * band_size + j + 1}")
-                                for j in range(band_size)
-                            ]
-                        ),
-                        "UTF-8",
-                    )
-                )
-                for b in range(n_bands)
-            ]
-            bands = sig.select(
-                "doc_id", F.explode(F.array(*band_exprs)).alias("band")
-            ).localCheckpoint()
-            a, b = bands.alias("a"), bands.alias("b")
-            cand = (
-                a.join(
-                    b,
-                    (F.col("a.band") == F.col("b.band"))
-                    & (F.col("a.doc_id") < F.col("b.doc_id")),
-                )
-                .select(F.col("a.doc_id").alias("da"), F.col("b.doc_id").alias("db"))
-                .distinct()
-                .localCheckpoint()
-            )
-            stats = cand.agg(
-                F.count(F.lit(1)).alias("cand"),
-                F.sum(
-                    (F.pmod("da", F.lit(k)) != F.pmod("db", F.lit(k))).cast("long")
-                ).alias("cand_x"),
-            ).collect()[0]
-            ds = sig.select("doc_id", "toks", "n")
-            verified = (
-                cand.join(
-                    ds.select(
-                        F.col("doc_id").alias("da"),
-                        F.col("toks").alias("ta"),
-                        F.col("n").alias("na"),
-                    ),
-                    "da",
-                )
-                .join(
-                    ds.select(
-                        F.col("doc_id").alias("db"),
-                        F.col("toks").alias("tb"),
-                        F.col("n").alias("nb"),
-                    ),
-                    "db",
-                )
-                .withColumn("ni", F.size(F.array_intersect("ta", "tb")))
-                .filter(
-                    F.col("ni") * 1.0 / (F.col("na") + F.col("nb") - F.col("ni"))
-                    >= 0.5
-                )
-                .count()
-            )
-            max_bucket = (
-                bands.groupBy("band").count().agg(F.max("count")).collect()[0][0]
-            )
-            row[scheme] = {
-                "cand": int(stats["cand"] or 0),
-                "cand_x": int(stats["cand_x"] or 0),
-                "verified": int(verified),
-                "max_bucket": int(max_bucket or 0),
-                "sec": round(time.perf_counter() - t0, 2),
-            }
-        out[f"x{k}"] = row
-    return out
-
-
 def _bench_databound_scaled(
     spark, sf_dir: str, factor: int = 10
 ) -> dict:
@@ -1114,82 +494,11 @@ def main() -> None:
         spark.stop()
         return
 
-    if "--scaling-minhash" in sys.argv:
-        print(json.dumps({"metric": "minhash_scaling", "sf_dir": sf_dir,
-                          **_bench_minhash_scaling(spark, sf_dir)}))
-        spark.stop()
-        return
-
-    if "--scaling" in sys.argv:
-        print(json.dumps({"metric": "scaling_curve", "sf_dir": sf_dir,
-                          **_bench_scaling(spark, sf_dir)}))
-        spark.stop()
-        return
-
-    if "--soak" in sys.argv or os.environ.get("SPARK_GRAFT_SOAK"):
-        # 10x-volume CDC soak (not part of the default per-round bench:
-        # it adds minutes of wall time; run explicitly, results recorded
-        # in SCALE.md "CDC soak" section)
-        print(json.dumps({"metric": "cdc_soak", **_soak_cdc(spark)}))
-        spark.stop()
-        return
-
-    if "--soak-split" in sys.argv:
-        # incremental leakage-safe split soak (VERDICT r12 item 5):
-        # randomized increments accumulate sticky quarantine; the
-        # curve (quarantine_frac per round) plus the epoch re-split
-        # drain is recorded in SCALE.md "quarantine drain"
-        print(json.dumps({"metric": "split_soak", **_soak_split(spark)}))
-        spark.stop()
-        return
-
-    if "--soak-topk" in sys.argv:
-        # top-k state-commit soak (VERDICT r13 item 7): steady-state
-        # cost of the two-phase saturation write + observed
-        # spurious-refill rate; recorded in SCALE.md
-        print(json.dumps({"metric": "topk_soak", **_soak_topk(spark)}))
-        spark.stop()
-        return
-
     if "--soak-media" in sys.argv:
         # media front-door soak (VERDICT r11 item 4): sustained
         # mixed-modality ingest rate + lag SLO + probe-I/O-vs-delta
         # table; results recorded in SCALE.md "media front door soak"
         print(json.dumps({"metric": "media_soak", **_soak_media(spark)}))
-        spark.stop()
-        return
-
-    if "--soak-pruned" in sys.argv:
-        # bucket-PRUNING soak (VERDICT r5 item 6): at 2000 keys/batch x
-        # 64 buckets the default soak touches every bucket, so its
-        # write-amplification number never exercises pruning.  Here the
-        # delta is key-localized relative to the bucket count (32 new
-        # PKs/batch over 256 buckets -> <=~12% of fact buckets touched
-        # per refresh), so per-refresh bytes must come out << live
-        # store bytes -- the measured O(delta-bucket) I/O claim.
-        # (256, not 1024: a 1024-file bootstrap per bucketed table
-        # blows the local wall-clock budget without changing the claim.)
-        print(
-            json.dumps(
-                {
-                    "metric": "cdc_soak_pruned",
-                    **_soak_cdc(
-                        spark,
-                        batches=12,
-                        rows_per_batch=32,
-                        n_customers=2000,
-                        base_transactions=40000,
-                        buckets=256,
-                        # combined soak (VERDICT r7/r8 item 8): SCD2
-                        # history riding the apply hook + zone-mapped
-                        # fact dates, same run -- history-write and
-                        # prune-hit columns land in SCALE.md
-                        zone_cols={"transactions": ["transaction_date"]},
-                        scd2_tables=["customers"],
-                    ),
-                }
-            )
-        )
         spark.stop()
         return
 
@@ -1284,8 +593,9 @@ def main() -> None:
         )
         _drive_cdc(spark, _tmp, _PTS(os.path.join(_tmp, "store")))
 
+    entries = __spark_entry__.queries()
     timings: dict[str, float] = {}
-    for name, (fn, _sql) in CATALOG.items():
+    for name, fn in entries.items():
         t0 = time.perf_counter()
         fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
         timings[name] = round(time.perf_counter() - t0, 3)
@@ -1297,7 +607,7 @@ def main() -> None:
     # compile-order changes.  The warm wall is the steady-state plan
     # cost -- the number to diff across rounds.
     timings_warm: dict[str, float] = {}
-    for name, (fn, _sql) in CATALOG.items():
+    for name, fn in entries.items():
         t0 = time.perf_counter()
         fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
         timings_warm[name] = round(time.perf_counter() - t0, 3)
@@ -1323,9 +633,9 @@ def main() -> None:
         "leakage_safe_split",
     )
     for name in ITERATIVE_ENTRIES:
-        if name not in CATALOG:
+        if name not in entries:
             continue
-        fn, _sql = CATALOG[name]
+        fn = entries[name]
         for _extra in range(2):
             t0 = time.perf_counter()
             fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
@@ -1349,7 +659,7 @@ def main() -> None:
         from tests.oracle import duckdb_conn
 
         con = duckdb_conn(sf_dir)
-        for name, (_fn, sql) in CATALOG.items():
+        for name, sql in __spark_entry__.oracle_sql().items():
             if name == "similarity_topk_ivf":
                 # data-dependent oracle: regenerate for this scale
                 from sfguide_intro_to_cdc_using_snowflake_postgres_connector_dynamic_tables_spark.plans.catalog_ext import (

@@ -1,354 +1,243 @@
-"""Gate-rotation policy invariants (plans/catalog.py::_GATE_TAIL).
+"""Gate-rotation policy invariants (``__spark_entry__.gate_order``).
 
-The driver's correctness gate hashes only the first 50 catalog
-entries; the rotation machinery must never be able to hide work from
-it.  Enforced here so a bad rotation fails CI instead of surfacing in
-a judge audit:
+The correctness gate hashes only the first 50 ``queries()``
+entries; the rotation must never be able to hide work from it.
+Enforced here so a bad rotation fails CI instead of surfacing only
+once the next record lands:
 
-1. every tail entry earned a driver-green row in one of the two most
+1. every tail entry earned a green gate row in one of the two most
    recent recorded rounds (sat out at most two rounds);
 2. any entry absent from BOTH recent rounds' records (i.e. newly
-   added) must be inside the gated window;
+   added), or red in the latest one, must be inside the gated window;
 3. the window is exactly 50 when the catalog exceeds 50.
+
+The policy is a pure function of the catalog names and the records,
+so most tests feed it synthetic records; the repo-level tests read the
+committed ``CORRECTNESS_r*.json`` through ``recorded_rounds()``.
 """
 
 from __future__ import annotations
 
-import glob
 import json
 import os
-import re
+import random
+import subprocess
+import sys
+
+from __spark_entry__ import (
+    GATE_WINDOW,
+    gate_order,
+    oracle_sql,
+    queries,
+    recorded_rounds,
+)
+from sfguide_intro_to_cdc_using_snowflake_postgres_connector_dynamic_tables_spark.plans.catalog import (
+    CATALOG,
+)
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
-def _recent_records(n: int = 2) -> list[dict]:
-    paths = sorted(
-        glob.glob(os.path.join(REPO, "CORRECTNESS_r*.json")),
-        key=lambda p: int(re.search(r"r(\d+)", os.path.basename(p)).group(1)),
-    )
-    return [json.load(open(p)) for p in paths[-n:]]
+def _green(rnd: int, names) -> tuple[int, dict]:
+    return rnd, {n: {"hash_match": True} for n in names}
 
 
-def test_gate_tail_policy():
-    from sfguide_intro_to_cdc_using_snowflake_postgres_connector_dynamic_tables_spark.plans.catalog import (
-        CATALOG,
-        _GATE_TAIL,
-    )
+def _last_green(records) -> dict[str, int]:
+    out: dict[str, int] = {}
+    for rnd, rec in records:
+        for k, v in rec.items():
+            if v.get("hash_match"):
+                out[k] = rnd
+    return out
 
-    recents = _recent_records(2)
-    assert recents, "no CORRECTNESS_r*.json recorded yet"
+
+def _assert_tail_policy(ordered: list[str], records) -> None:
+    """Invariants 1-3 of the module docstring against the two most
+    recent records."""
+    recents = [rec for _rnd, rec in records[-2:]]
     recent_green = {
         k for d in recents for k, v in d.items() if v.get("hash_match")
     }
     recorded = {k for d in recents for k in d}
     # an entry whose MOST RECENT record is red just regressed: it must
     # stay in-window until it re-earns green, even if an older round
-    # once recorded it green (green-in-either is fine for the tail,
-    # but a fresh regression may not rotate out on old credit)
-    latest = recents[-1]
-    recent_red = {k for k, v in latest.items() if not v.get("hash_match")}
+    # once recorded it green
+    recent_red = {k for k, v in recents[-1].items() if not v.get("hash_match")}
+    window = set(ordered[:GATE_WINDOW])
+    tail = ordered[GATE_WINDOW:]
 
-    names = list(CATALOG)
-    window = set(names[:50])
-
-    # 1. tail only holds recently-driver-GREEN entries, and an entry
-    # red in the LATEST record can never rotate out on older credit
-    stale = [
-        k for k in _GATE_TAIL if k not in recent_green or k in recent_red
-    ]
-    assert stale == [], f"tail entries without a recent driver-green row: {stale}"
-
-    # 2. entries the driver has never recently seen, and entries whose
-    # last recent record is RED, stay in-window
-    must_stay = [k for k in names if k not in recorded or k in recent_red]
+    stale = [k for k in tail if k not in recent_green or k in recent_red]
+    assert stale == [], f"tail entries without a recent green gate row: {stale}"
+    must_stay = [k for k in ordered if k not in recorded or k in recent_red]
     outside = [k for k in must_stay if k not in window]
     assert outside == [], f"unverified/red entries rotated out of the gate: {outside}"
-
-    # 3. window fills the driver's full budget
-    if len(names) > 50:
-        assert len(names) - len([k for k in _GATE_TAIL if k in CATALOG]) == 50
+    if len(ordered) > GATE_WINDOW:
+        assert len(window) == GATE_WINDOW
 
 
-def test_rotation_self_heals_when_next_record_lands(monkeypatch):
-    """The round-5/round-6 judge red: a hand-rotated tail went stale
-    the instant the driver committed the next CORRECTNESS record.
-    The self-computing rotation must stay policy-compliant when
-    synthetic next-round records (current window all green) land.
+def test_gate_tail_policy():
+    """The order ``queries()`` returns in this repo obeys the policy."""
+    records = recorded_rounds()
+    assert records, "no CORRECTNESS_r*.json recorded yet"
+    _assert_tail_policy(list(queries()), records)
 
-    The policy is a TWO-round sit-out maximum: a tail entry must hold
-    a green from one of the two most recent recorded rounds.  (The
-    round-11 judge red: this test asserted <=1-round staleness -- a
-    stricter invariant than the documented policy -- and broke the
-    moment CORRECTNESS_r11 landed with a 38/47/50 last-green
-    histogram, because one 50-wide synthetic window cannot absorb the
-    38 stalest entries AND re-green the 47 next-stalest.)  With a
-    catalog of ceil(n/50) = 3 windows, the steady state is a 3-round
-    rotation cycle -- "everything green within the last two records"
-    is unreachable by construction.  We drive THREE synthetic rounds
-    (one full cycle) and assert the real <=2-round sit-out bound after
-    every one of them."""
-    from sfguide_intro_to_cdc_using_snowflake_postgres_connector_dynamic_tables_spark.plans import (
-        catalog as cat,
-    )
 
-    real_records = cat._recorded_rounds()
-    assert real_records, "needs at least one committed record"
-    records = list(real_records)
-    try:
+def test_gate_order_tail_policy_on_synthetic_history():
+    """Never-recorded and latest-red entries seat first (by name), then
+    the stalest green; a red entry cannot rotate out on older credit."""
+    names = [f"e{i:03d}" for i in range(120)]
+    records = [
+        _green(1, names[:100]),
+        _green(2, names[:60]),
+        (3, {**_green(3, names[60:100])[1], "e005": {"hash_match": False}}),
+    ]
+    ordered, overflow = gate_order(names, records)
+    assert overflow == ()
+    # hard-forced: 20 never recorded + e005 red in the latest record
+    assert ordered[:21] == sorted(names[100:] + ["e005"])
+    # then stalest green first: round-2 greens before round-3 greens
+    assert ordered[21:80] == [n for n in names[:60] if n != "e005"]
+    assert ordered[80:] == names[60:100]
+    _assert_tail_policy(ordered, records)
+
+
+def test_rotation_self_heals_when_next_record_lands():
+    """Regression guard: a hand-rotated tail once went stale the
+    instant the next CORRECTNESS record was committed.  The
+    rotation must stay policy-compliant when synthetic next-round
+    records (current window all green) land.
+
+    The policy is a TWO-round sit-out maximum.  With a catalog of
+    ceil(n/50) = 3 windows the steady state is a 3-round rotation
+    cycle, so we drive THREE synthetic rounds (one full cycle) and
+    assert the <=2-round sit-out bound after every one of them, from
+    the committed history and from a synthetic steady-state one."""
+    names = list(CATALOG)
+    by_name = sorted(names)
+    histories = {
+        "repo": recorded_rounds(),
+        "synthetic": [
+            _green(1, names),
+            _green(2, by_name[:GATE_WINDOW]),
+            _green(3, by_name[GATE_WINDOW : 2 * GATE_WINDOW]),
+        ],
+    }
+    for label, records in histories.items():
+        assert records, label
+        ordered, _ = gate_order(names, records)
         for step in (1, 2, 3):
-            if step == 2:
-                # the NEXT round starts with a reset touched set (the
-                # documented per-round policy); simulating round N+2
-                # with round N+1's forced entries still pinned would
-                # hold window slots hostage that reality frees up
-                monkeypatch.setattr(
-                    cat, "_TOUCHED_THIS_ROUND", frozenset()
-                )
-            window_now = list(cat.CATALOG)[: cat._GATE_WINDOW]
-            synthetic = (
-                records[-1][0] + 1,
-                {n: {"hash_match": True} for n in window_now},
-            )
-            records = records + [synthetic]
-            snapshot = list(records)
-            monkeypatch.setattr(
-                cat, "_recorded_rounds", lambda s=snapshot: s
-            )
-            cat._reorder_for_gate()
-            names = list(cat.CATALOG)
-            window = set(names[: cat._GATE_WINDOW])
-            last_green: dict[str, int] = {}
-            for rnd, rec in records:
-                for k, v in rec.items():
-                    if v.get("hash_match"):
-                        last_green[k] = rnd
-            new_round = synthetic[0]
-            for n in names[cat._GATE_WINDOW :]:
-                # the REAL policy: a tail entry sat out at most two
-                # recorded rounds (green in new_round-2 or later)
-                assert last_green.get(n, -1) >= new_round - 2, (step, n)
+            new_round = records[-1][0] + 1
+            records = records + [_green(new_round, ordered[:GATE_WINDOW])]
+            ordered, overflow = gate_order(names, records)
+            assert overflow == (), (label, step, overflow)
+            last_green = _last_green(records)
+            for n in ordered[GATE_WINDOW:]:
+                assert last_green.get(n, -1) >= new_round - 2, (label, step, n)
             for n in names:
                 if n not in last_green:
-                    assert n in window, (step, n)
-                # touched entries seat only after every must-rotate
-                # entry has; a trimmed touched entry defers to the next
-                # round (still oracle-covered) instead of spilling a
-                # stale-at-limit entry; and once THIS round's record is
-                # on disk, a touched entry green in it is already
-                # driver-verified and no longer needs a seat (r14)
-                verified = (
-                    new_round >= cat._TOUCHED_ROUND
-                    and last_green.get(n) == new_round
-                )
-                if (
-                    n in cat._TOUCHED_THIS_ROUND
-                    and n not in cat._GATE_TOUCHED_TRIMMED
-                    and not verified
-                ):
-                    assert n in window, (step, n)
+                    assert n in ordered[:GATE_WINDOW], (label, step, n)
         # one full rotation cycle later, NO entry anywhere (window or
         # tail) is older than the two most recent records
-        new_round = records[-1][0]
-        for n in list(cat.CATALOG):
-            assert last_green.get(n, -1) >= new_round - 2, n
-    finally:
-        monkeypatch.undo()
-        cat._reorder_for_gate()
-
-
-def test_rotation_survives_next_record_with_touched_pinned(monkeypatch):
-    """The r11 AND r12 judge reds, reproduced exactly: the driver
-    commits the next CORRECTNESS record into a checkout whose
-    ``_TOUCHED_THIS_ROUND`` is still the CURRENT round's (nonzero)
-    set -- that is the state of the tree the judge audits.  Under the
-    pre-r13 policy, touched entries outranked stale-at-limit ones and
-    one must-rotate entry spilled into the tail (``window_analytics``
-    in r12).  The r13 policy seats stale-at-limit entries first, so
-    ``test_gate_tail_policy``'s invariants must hold on the
-    post-record checkout WITHOUT resetting the touched set."""
-    from sfguide_intro_to_cdc_using_snowflake_postgres_connector_dynamic_tables_spark.plans import (
-        catalog as cat,
-    )
-
-    assert cat._TOUCHED_THIS_ROUND, (
-        "this test needs the real nonzero per-round touched set"
-    )
-    real_records = cat._recorded_rounds()
-    assert real_records
-    window_now = list(cat.CATALOG)[: cat._GATE_WINDOW]
-    synthetic = (
-        real_records[-1][0] + 1,
-        {n: {"hash_match": True} for n in window_now},
-    )
-    records = real_records + [synthetic]
-    monkeypatch.setattr(cat, "_recorded_rounds", lambda: records)
-    try:
-        cat._reorder_for_gate()
-        # no must-seat entry may spill, with the touched set STILL pinned
-        assert cat._GATE_FORCED_OVERFLOW == ()
-        names = list(cat.CATALOG)
-        window = set(names[: cat._GATE_WINDOW])
-        last_green: dict[str, int] = {}
-        for rnd, rec in records:
-            for k, v in rec.items():
-                if v.get("hash_match"):
-                    last_green[k] = rnd
-        new_round = synthetic[0]
-        recent_green = {
-            k for k, r in last_green.items() if r >= new_round - 1
-        }
-        for n in names[cat._GATE_WINDOW :]:
-            # the exact invariant test_gate_tail_policy checks against
-            # the two most recent records on disk
-            assert n in recent_green, n
         for n in names:
-            if n not in last_green:
-                assert n in window, n
-    finally:
-        monkeypatch.undo()
-        cat._reorder_for_gate()
-
-
-def test_rotation_trims_touched_before_spilling_stale(monkeypatch):
-    """Overflow pressure: when stale-at-limit entries plus the touched
-    set exceed the window, the rotation must trim touched entries (and
-    record them in ``_GATE_TOUCHED_TRIMMED``) rather than spill a
-    single must-rotate entry -- the exact failure mode of the r11/r12
-    round-close reds."""
-    from sfguide_intro_to_cdc_using_snowflake_postgres_connector_dynamic_tables_spark.plans import (
-        catalog as cat,
-    )
-
-    names = sorted(cat.CATALOG)
-    w = cat._GATE_WINDOW
-    # build a synthetic history where exactly w entries are
-    # stale-at-limit (green only at round 1 with rounds 2 and 3 since
-    # recorded) and everything else is fresh at round 3
-    stale_names = names[:w]
-    fresh_names = names[w:]
-    records = [
-        (1, {n: {"hash_match": True} for n in names}),
-        (2, {n: {"hash_match": True} for n in fresh_names}),
-        (3, {n: {"hash_match": True} for n in fresh_names}),
-    ]
-    # pin a touched set drawn from the FRESH entries -- under the old
-    # policy these would outrank the stale ones and spill exactly
-    # len(touched) must-rotate entries
-    touched = frozenset(fresh_names[:3])
-    monkeypatch.setattr(cat, "_recorded_rounds", lambda: records)
-    monkeypatch.setattr(cat, "_TOUCHED_THIS_ROUND", touched)
-    try:
-        cat._reorder_for_gate()
-        window = set(list(cat.CATALOG)[:w])
-        # every stale-at-limit entry seated
-        assert set(stale_names) <= window
-        # all touched entries were trimmed, deterministically, and none
-        # spilled a stale entry
-        assert set(cat._GATE_TOUCHED_TRIMMED) == set(touched)
-        assert cat._GATE_FORCED_OVERFLOW == ()
-        assert not (set(touched) & window)
-    finally:
-        monkeypatch.undo()
-        cat._reorder_for_gate()
-        assert cat._GATE_TOUCHED_TRIMMED == ()
-
-
-def test_touched_stops_forcing_once_this_rounds_record_lands(monkeypatch):
-    """r14 policy: once the driver record FOR the touched set's own
-    round (``_TOUCHED_ROUND``) is on disk, a touched entry green in it
-    has had its modified code driver-verified and stops forcing a
-    seat.  Without this, the freshly-landed record shrinks the free
-    capacity (the just-seated stale entries went fresh, the NEXT
-    stale cohort seats) while every touched entry still forces -- and
-    the no-trim invariant goes red the moment the record lands, which
-    is exactly the r11/r12 round-close failure class VERDICT r13
-    item 6 flags."""
-    from sfguide_intro_to_cdc_using_snowflake_postgres_connector_dynamic_tables_spark.plans import (
-        catalog as cat,
-    )
-
-    names = sorted(cat.CATALOG)
-    w = cat._GATE_WINDOW
-    tr = cat._TOUCHED_ROUND
-    stale_names = names[: w - 2]  # stale-at-limit: last green tr-2
-    touched = frozenset(names[w : w + 5])  # green in THIS round's record
-    records = [
-        (tr - 2, {n: {"hash_match": True} for n in names}),
-        (tr - 1, {n: {"hash_match": True} for n in names if n not in stale_names}),
-        (tr, {n: {"hash_match": True} for n in touched}),
-    ]
-    monkeypatch.setattr(cat, "_recorded_rounds", lambda: records)
-    monkeypatch.setattr(cat, "_TOUCHED_THIS_ROUND", touched)
-    try:
-        cat._reorder_for_gate()
-        window = set(list(cat.CATALOG)[:w])
-        # free capacity (2) < |touched| (5), but none of the touched
-        # entries force -- their re-verification already happened in
-        # this round's record -- so nothing is trimmed and every
-        # stale-at-limit entry still seats
-        assert set(stale_names) <= window
-        assert cat._GATE_TOUCHED_TRIMMED == ()
-        assert cat._GATE_FORCED_OVERFLOW == ()
-    finally:
-        monkeypatch.undo()
-        cat._reorder_for_gate()
-        assert cat._GATE_TOUCHED_TRIMMED == ()
-
-
-def test_no_touched_trim_in_this_repo():
-    """In the real checkout the per-round touched set must be sized to
-    the rotation's free capacity (capacity note in catalog.py) so every
-    touched entry actually earns a driver row this round."""
-    from sfguide_intro_to_cdc_using_snowflake_postgres_connector_dynamic_tables_spark.plans import (
-        catalog as cat,
-    )
-
-    assert cat._GATE_TOUCHED_TRIMMED == (), (
-        "touched entries trimmed from the driver window -- shrink "
-        f"_TOUCHED_THIS_ROUND: {cat._GATE_TOUCHED_TRIMMED}"
-    )
+            assert last_green.get(n, -1) >= new_round - 2, (label, n)
 
 
 def test_no_forced_overflow_in_this_repo():
-    """>50 never-recorded/red/touched entries would silently fall out
-    of the driver's window.  Import must NOT raise on overflow (a
-    checkout without the CORRECTNESS artifacts sees every entry as
-    never-recorded and the library has to stay importable), so the
-    overflow surfaces here instead -- and in THIS repo, with the
-    artifacts committed, it must be empty."""
+    """>50 never-recorded/red/stale-at-limit entries would silently
+    fall out of the gated window.  ``gate_order`` never raises on
+    overflow (a checkout without the CORRECTNESS artifacts sees every
+    entry as never recorded), so the overflow surfaces here instead --
+    and in THIS repo, with the artifacts committed, it must be empty."""
+    _, overflow = gate_order(list(CATALOG), recorded_rounds())
+    assert overflow == (), (
+        "forced gate entries (new/red/stale) exceed the "
+        f"{GATE_WINDOW}-entry gated window: {overflow}"
+    )
+
+
+def test_rotation_records_overflow_without_raising():
+    """With no CORRECTNESS records every entry is forced; the order
+    stays canonical (sorted) and the overflow is returned, not
+    raised."""
+    names = list(CATALOG)
+    ordered, overflow = gate_order(names, [], window=10)
+    assert ordered == sorted(names)
+    assert list(overflow) == sorted(names)[10:]
+
+
+def test_gate_order_ignores_input_order():
+    """The order depends only on the name set and the records."""
+    names = list(CATALOG)
+    records = recorded_rounds()
+    shuffled = random.Random(7).sample(names, len(names))
+    assert gate_order(shuffled, records) == gate_order(names, records)
+
+
+def test_queries_and_oracle_sql_share_the_gate_order():
+    q = list(queries())
+    sql = oracle_sql()
+    assert q == gate_order(list(CATALOG), recorded_rounds())[0]
+    assert list(sql) == [n for n in q if n in sql]
+    assert all(sql[n] == CATALOG[n][1] for n in sql)
+
+
+def test_catalog_import_reads_no_records():
+    """Importing the library reads no repo bookkeeping: no open() of a
+    CORRECTNESS record and no glob at all (audit events, fresh
+    interpreter so no earlier import has already run the module)."""
+    code = (
+        "import json, sys\n"
+        "events = []\n"
+        "def hook(ev, args):\n"
+        "    if ev == 'glob.glob' or (ev == 'open' and 'CORRECTNESS_r' in str(args[0])):\n"
+        "        events.append([ev, str(args[0])])\n"
+        "sys.addaudithook(hook)\n"
+        "import sfguide_intro_to_cdc_using_snowflake_postgres_connector_dynamic_tables_spark.plans.catalog\n"
+        "print(json.dumps(events))\n"
+    )
+    env = {**os.environ, "PYTHONPATH": REPO}
+    out = subprocess.run(
+        [sys.executable, "-c", code],
+        cwd=REPO,
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=300,
+        check=True,
+    )
+    assert json.loads(out.stdout.strip().splitlines()[-1]) == []
+
+
+def test_catalog_keeps_registration_order():
+    """``CATALOG`` is the base entries followed by each extension
+    catalog in registration order; only ``queries()`` reorders."""
     from sfguide_intro_to_cdc_using_snowflake_postgres_connector_dynamic_tables_spark.plans import (
         catalog as cat,
     )
-
-    assert cat._GATE_FORCED_OVERFLOW == (), (
-        "forced gate entries (new/red/touched) exceed the "
-        f"{cat._GATE_WINDOW}-entry driver window: "
-        f"{cat._GATE_FORCED_OVERFLOW}"
+    from sfguide_intro_to_cdc_using_snowflake_postgres_connector_dynamic_tables_spark.plans.catalog_cdc import (
+        CDC_CATALOG,
+    )
+    from sfguide_intro_to_cdc_using_snowflake_postgres_connector_dynamic_tables_spark.plans.catalog_ext import (
+        EXT_CATALOG,
+    )
+    from sfguide_intro_to_cdc_using_snowflake_postgres_connector_dynamic_tables_spark.plans.catalog_more import (
+        MORE_CATALOG,
+    )
+    from sfguide_intro_to_cdc_using_snowflake_postgres_connector_dynamic_tables_spark.plans.catalog_pipeline import (
+        PIPELINE_CATALOG,
+    )
+    from sfguide_intro_to_cdc_using_snowflake_postgres_connector_dynamic_tables_spark.plans.catalog_train import (
+        TRAIN_CATALOG,
     )
 
-
-def test_rotation_records_overflow_without_raising(monkeypatch):
-    """With no CORRECTNESS records every entry is forced; the reorder
-    must stay importable (no raise), keep the forced entries
-    window-first, and record the overflow for the test above."""
-    from sfguide_intro_to_cdc_using_snowflake_postgres_connector_dynamic_tables_spark.plans import (
-        catalog as cat,
-    )
-
-    monkeypatch.setattr(cat, "_recorded_rounds", lambda: [])
-    monkeypatch.setattr(cat, "_GATE_WINDOW", 10)
-    try:
-        cat._reorder_for_gate()  # must not raise
-        names = list(cat.CATALOG)
-        assert len(cat._GATE_FORCED_OVERFLOW) == len(names) - 10
-        # forced order is canonical (sorted); overflow is the tail of it
-        assert list(cat._GATE_FORCED_OVERFLOW) == sorted(names)[10:]
-        assert names == sorted(names)
-    finally:
-        monkeypatch.undo()
-        cat._reorder_for_gate()
-        assert cat._GATE_FORCED_OVERFLOW == ()
+    names = list(CATALOG)
+    base = names[: len(cat._BASE_KEYS)]
+    assert set(base) == cat._BASE_KEYS
+    assert names[len(base) :] == [
+        k
+        for d in (EXT_CATALOG, MORE_CATALOG, PIPELINE_CATALOG, TRAIN_CATALOG, CDC_CATALOG)
+        for k in d
+    ]
 
 
 def test_catalog_keys_pairwise_disjoint():

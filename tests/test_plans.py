@@ -179,22 +179,18 @@ def test_q6_predicates_reach_the_scan(spark):
 
 
 def test_catalog_registry_integrity(spark):
-    """Guard the gate machinery itself: every _GATE_TAIL name must
-    exist (a typo would silently shrink the tail and push entries out
-    of the driver's first-50 window), every entry is a (fn, sql) pair,
-    and the head holds exactly 50 entries."""
-    from sfguide_intro_to_cdc_using_snowflake_postgres_connector_dynamic_tables_spark.plans.catalog import (
-        _GATE_TAIL,
-    )
+    """Guard the entry-point contract itself: ``queries()`` is a permutation
+    of the catalog (a dropped or invented name would shift entries in
+    or out of the first-50 gated window), every entry is a
+    (fn, sql) pair, and ``oracle_sql()`` covers exactly the entries
+    with SQL."""
+    import __spark_entry__ as e
 
-    names = list(CATALOG)
-    missing = [n for n in _GATE_TAIL if n not in CATALOG]
-    assert not missing, f"_GATE_TAIL names not in CATALOG: {missing}"
-    assert len(names) - len(_GATE_TAIL) == 50, (
-        f"gate head is {len(names) - len(_GATE_TAIL)} entries, not 50 -- "
-        "the self-computing rotation (plans/catalog.py) is broken"
-    )
-    assert names[-len(_GATE_TAIL):] == list(_GATE_TAIL)
+    names = list(e.queries())
+    assert len(names) == len(CATALOG) and set(names) == set(CATALOG)
+    assert set(e.oracle_sql()) == {
+        n for n, (_fn, sql) in CATALOG.items() if sql is not None
+    }
     for name, (fn, sql) in CATALOG.items():
         assert callable(fn), name
         assert sql is None or isinstance(sql, str), name
