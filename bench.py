@@ -779,14 +779,17 @@ def main() -> None:
     # nulling that round's whole PERF comparison): mirror the exact
     # stdout line to a file the driver/judge can always read, and emit
     # the stdout line LAST -- after spark.stop(), so no shutdown output
-    # can land after it.  Both are additions; the timed path and the
-    # one-JSON-line contract are unchanged.
+    # can land after it.  Like BENCH_QUERIES.json, the mirror is a
+    # tracked artifact: only the sf0.1 scale rewrites it, so small-SF
+    # smoke runs leave the checkout clean.  Both are additions; the
+    # timed path and the one-JSON-line contract are unchanged.
     line = json.dumps(result)
-    try:
-        with open(os.path.join(REPO, "BENCH_SELF.json"), "w") as fh:
-            fh.write(line + "\n")
-    except OSError:
-        pass  # mirror is best-effort; stdout is the contract
+    if sf_val == 0.1:
+        try:
+            with open(os.path.join(REPO, "BENCH_SELF.json"), "w") as fh:
+                fh.write(line + "\n")
+        except OSError:
+            pass  # mirror is best-effort; stdout is the contract
     spark.stop()
     print(line)
 

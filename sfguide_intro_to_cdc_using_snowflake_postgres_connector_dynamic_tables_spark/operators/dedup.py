@@ -312,6 +312,13 @@ def lsh_pairs_from_tokens(
     keys evaluate it), so any doc past the bound fails the JOB loudly
     instead of silently running the narrow scheme on a whole-book
     corpus.  Pass ``narrow_max_tokens=None`` to disable the check.
+
+    ``pin``: whether to pin the bands self-join and candidate distinct
+    to ``spark.sql.shuffle.partitions`` reducers.  ``None`` decides
+    from ``tok``'s partition count, which is job-free only when
+    ``tok`` is narrow: on a ``tok`` with an exchange in its plan (a
+    shuffled token table) the probe runs one AQE stage job, so pass
+    ``pin`` explicitly there.
     """
     if wide == "auto":
         wide = (
@@ -342,15 +349,20 @@ def lsh_pairs_from_tokens(
     # well under that (measured A/B at sf0.1), so the pins gate on
     # the input already being at least reducer-count wide (the same
     # partition-count proxy _spread_small_input uses, inverted; one
-    # driver-side getNumPartitions per call, no job).
+    # getNumPartitions per call -- job-free only on a narrow ``tok``,
+    # see ``pin=None`` below).
     sig = tok.groupBy("doc_id").agg(*per_doc_aggs).cache()
     _SIG_CACHES.append(sig)
     n_red = int(tok.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    # ``pin=None`` auto-detects via one driver-side getNumPartitions
-    # (analyzer work, no job).  Per-tick STREAMING callers pass
-    # pin=False explicitly: their inputs are delta-sized by contract,
-    # and even the analyzer cost does not belong on a tick path
-    # (VERDICT r14 item 4's _spread_small_input note, same class).
+    # ``pin=None`` auto-detects via one ``tok.rdd.getNumPartitions()``.
+    # On a narrow ``tok`` (scans, projections, filters) that is driver
+    # analyzer work and runs no job; on a ``tok`` whose plan holds an
+    # exchange, ``df.rdd`` under AQE materializes the shuffle stage
+    # first -- one job on pyspark 4.1.2 -- so callers with shuffled
+    # token tables pass ``pin`` explicitly.  Per-tick STREAMING callers
+    # pass pin=False: their inputs are delta-sized by contract, and
+    # even the analyzer cost does not belong on a tick path (VERDICT
+    # r14 item 4's _spread_small_input note, same class).
     if pin is None:
         pin = tok.rdd.getNumPartitions() >= n_red
     if not wide and narrow_max_tokens is not None:

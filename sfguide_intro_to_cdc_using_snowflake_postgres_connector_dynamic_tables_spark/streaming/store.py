@@ -288,9 +288,11 @@ class ParquetTableStore:
         introduce columns the current schema lacks, stamp a fresh
         union-schema marker under ``stage`` (so empty / fully-pruned
         reads see the evolved column set) and return its dir; otherwise
-        carry the manifest's marker forward.  ONE definition shared by
-        append() and merge() -- the evolution rule must never diverge
-        between them (ADVICE r4).  Returns ``(schema_dir, schema_json)``
+        carry the manifest's marker forward.  Called only by
+        ``_write_buckets`` for its incremental form, so merge(),
+        append() and optimize(buckets=...) share ONE evolution rule
+        that can never diverge between them (ADVICE r4).  Returns
+        ``(schema_dir, schema_json)``
         with the (possibly evolved) union schema for the new manifest;
         when the manifest already records its schema the old zero-row
         marker is never read (no footer job)."""
@@ -932,35 +934,156 @@ class ParquetTableStore:
                 self._write_manifest(name, v, {"schema": df.schema.jsonValue()})
                 self._commit(name, v)
                 return v
-            stage = f"w{v}-{uuid.uuid4().hex[:8]}"
-            stage_dir = os.path.join(tdir, stage)
-            (
-                df.withColumn("__part", self.bucket_expr(partition_key, n_buckets))
-                .write.partitionBy("__part")
-                .parquet(stage_dir)
-            )
+            parts = df.withColumn("__part", self.bucket_expr(partition_key, n_buckets))
+            return self._write_buckets(name, v, parts, partition_key, n_buckets, zone_cols)
+
+    def _write_buckets(
+        self,
+        name: str,
+        v: int,
+        parts: DataFrame,
+        key: str,
+        n_buckets: int,
+        zone_cols: list[str] | None,
+        base: dict | None = None,
+        replaced: list[str] | None = None,
+        cluster: bool = False,
+        writer_options: dict[str, str] | None = None,
+    ) -> int:
+        """The staged bucket write behind every partitioned writer:
+        write ``parts`` (the rows plus their ``__part`` bucket id) into
+        a fresh ``w<v>-<uuid>`` stage, one directory per bucket, then
+        write manifest ``v`` and commit it.  The caller holds the claim
+        on ``v``.
+
+        ``replaced=None`` is a full rewrite: the version is exactly the
+        written buckets, under a fresh zero-row schema marker.
+        Otherwise the write is incremental over ``base`` (the manifest
+        of ``v - 1``): the ``replaced`` bucket ids are dropped (a bucket
+        may have emptied), the written ones added, every other bucket
+        carried forward, and the schema follows
+        ``_evolved_schema_dir``.  Carried buckets keep their zone stats;
+        written ones get fresh ``zones`` from the staged files, and
+        fresh ``file_zones`` only when ``cluster`` (their rows were
+        sorted within each bucket by ``optimize(zorder_cols=...)``) --
+        otherwise they lose file-level granularity until the next
+        optimize."""
+        spark = parts.sparkSession
+        tdir = self._table_dir(name)
+        stage = f"w{v}-{uuid.uuid4().hex[:8]}"
+        stage_dir = os.path.join(tdir, stage)
+        rows = parts.drop("__part")
+        writer = parts.write.partitionBy("__part")
+        # e.g. {"parquet.block.size": ...} to size row groups so the
+        # z-order materializes as many tight-stat groups per file --
+        # min-max pruning works at row-group granularity
+        for k_opt, v_opt in (writer_options or {}).items():
+            writer = writer.option(k_opt, v_opt)
+        writer.parquet(stage_dir)
+        written = {
+            entry.split("=", 1)[1]: f"{stage}/{entry}"
+            for entry in os.listdir(stage_dir)
+            if entry.startswith("__part=")
+        }
+        if replaced is None:
             schema_dir = f"{stage}-schema"
-            df.limit(0).write.parquet(os.path.join(tdir, schema_dir))
-            partitions = {
-                entry.split("=", 1)[1]: f"{stage}/{entry}"
-                for entry in os.listdir(stage_dir)
-                if entry.startswith("__part=")
-            }
-            manifest = {
-                "key": partition_key,
-                "n_buckets": n_buckets,
-                "partitions": partitions,
-                "schema_dir": schema_dir,
-                "schema": df.schema.jsonValue(),
-            }
-            if zone_cols:
-                manifest["zone_cols"] = list(zone_cols)
-                manifest["zones"] = self._bucket_zones(
-                    df.sparkSession, stage_dir, zone_cols
+            rows.limit(0).write.parquet(os.path.join(tdir, schema_dir))
+            schema_json = rows.schema.jsonValue()
+            partitions = written
+        else:
+            # only merge's caller-supplied touched_buckets can miss a
+            # staged bucket: append and optimize derive ``replaced``
+            # from the very rows they stage
+            stray = set(written) - set(replaced)
+            if stray:
+                shutil.rmtree(stage_dir, ignore_errors=True)
+                raise ValueError(
+                    f"merge into {name!r}: upsert rows hash into buckets "
+                    f"{sorted(stray, key=int)} missing from touched_buckets; "
+                    "committing would drop those buckets' stored rows"
                 )
-            self._write_manifest(name, v, manifest)
-            self._commit(name, v)
-            return v
+            partitions = dict(base["partitions"])
+            for b in replaced:
+                partitions.pop(b, None)  # bucket may have emptied
+            partitions.update(written)
+            schema_dir, schema_json = self._evolved_schema_dir(
+                spark, tdir, base, rows, stage
+            )
+        manifest = {
+            "key": key,
+            "n_buckets": n_buckets,
+            "partitions": partitions,
+            "schema_dir": schema_dir,
+            "schema": schema_json,
+        }
+        if zone_cols:
+            # carried buckets' files stay on disk, so their bucket- and
+            # file-level stats carry regardless of whether THIS write
+            # clusters; on a full rewrite nothing is carried
+            zones, file_zones = (
+                {
+                    b: z
+                    for b, z in (base or {}).get(kind, {}).items()
+                    if b in partitions and b not in written
+                }
+                for kind in ("zones", "file_zones")
+            )
+            zones.update(self._bucket_zones(spark, stage_dir, zone_cols))
+            if cluster:
+                # rows are clustered within each bucket, so per-file
+                # stats are tight -- record them and read_pruned
+                # prunes FILES inside surviving buckets (the layout
+                # lever for range probes on a hash-bucketed table;
+                # pair with writer_options={"maxRecordsPerFile": N}
+                # to control the clustering granularity)
+                file_zones.update(self._file_zones(spark, stage_dir, tdir, zone_cols))
+            manifest["zone_cols"] = list(zone_cols)
+            manifest["zones"] = zones
+            if file_zones:
+                manifest["file_zones"] = file_zones
+        self._write_manifest(name, v, manifest)
+        self._commit(name, v)
+        return v
+
+    def _bucket_ids(self, keys: DataFrame, key: str, n_buckets: int) -> list[int]:
+        """Sorted distinct bucket ids of the ``key`` column of ``keys``:
+        one collect of <= ``n_buckets`` rows."""
+        return sorted(
+            r[0]
+            for r in keys.select(self.bucket_expr(key, n_buckets).alias("b"))
+            .distinct()
+            .collect()
+        )
+
+    def _rewrite_buckets(
+        self, spark: SparkSession, name: str, v: int, m: dict, touched: list[int], combine
+    ) -> int:
+        """Incremental write shared by ``merge`` and ``append``:
+        ``combine`` maps the rows the ``touched`` buckets of version
+        ``v`` (manifest ``m``) store -- None when none of them holds
+        rows yet -- to those buckets' new rows, which are staged and
+        committed as ``v + 1``."""
+        key, B = m["key"], m["n_buckets"]
+        tdir = self._table_dir(name)
+        old_paths = [
+            os.path.join(tdir, m["partitions"][str(b)])
+            for b in touched
+            if str(b) in m["partitions"]
+        ]
+        # manifest schema (r14+): buckets straddling an ADD COLUMN read
+        # under the union schema with NULLs for missing columns, no
+        # footer sweep; pre-r14 manifests fall back to mergeSchema
+        old_rows = (
+            self._read_parquet(spark, old_paths, self._manifest_schema(m))
+            if old_paths
+            else None
+        )
+        parts = combine(old_rows).withColumn("__part", self.bucket_expr(key, B))
+        with self._claimed(name, v + 1):
+            return self._write_buckets(
+                name, v + 1, parts, key, B, m.get("zone_cols"),
+                base=m, replaced=[str(b) for b in touched],
+            )
 
     def optimize(
         self,
@@ -1003,101 +1126,27 @@ class ParquetTableStore:
             df = self.read_buckets(spark, name, buckets)
         else:
             df = self.read(spark, name)
-        base_schema = df.schema.jsonValue()  # a re-cluster never evolves it
         if zorder_cols:
             from ..operators.zorder import with_morton
 
             df = with_morton(df, zorder_cols, bits)
+        width = B if buckets is None else len(buckets)
+        out = df.repartition(width, self.bucket_expr(key, B).alias("__part"))
+        out = out.withColumn("__part", self.bucket_expr(key, B))
+        if zorder_cols:
+            # __part leads the sort so the dynamic-partition writer's
+            # required ordering is already satisfied -- otherwise it
+            # re-sorts each task by __part alone and scrambles __z
+            out = out.sortWithinPartitions("__part", "__z").drop("__z")
         with self._claimed(name, v):
-            tdir = self._table_dir(name)
-            stage = f"w{v}-{uuid.uuid4().hex[:8]}"
-            stage_dir = os.path.join(tdir, stage)
-            width = B if buckets is None else max(len(buckets), 1)
-            out = df.repartition(width, self.bucket_expr(key, B).alias("__part"))
-            out = out.withColumn("__part", self.bucket_expr(key, B))
-            if zorder_cols:
-                # __part leads the sort so the dynamic-partition writer's
-                # required ordering is already satisfied -- otherwise it
-                # re-sorts each task by __part alone and scrambles __z
-                out = out.sortWithinPartitions("__part", "__z").drop("__z")
-            writer = out.write.partitionBy("__part")
-            # e.g. {"parquet.block.size": ...} to size row groups so the
-            # z-order materializes as many tight-stat groups per file --
-            # min-max pruning works at row-group granularity
-            for k_opt, v_opt in (writer_options or {}).items():
-                writer = writer.option(k_opt, v_opt)
-            writer.parquet(stage_dir)
-            written = {
-                entry.split("=", 1)[1]: f"{stage}/{entry}"
-                for entry in os.listdir(stage_dir)
-                if entry.startswith("__part=")
-            }
-            if buckets is None:
-                schema_dir = f"{stage}-schema"
-                self.read(spark, name).limit(0).write.parquet(
-                    os.path.join(tdir, schema_dir)
-                )
-                partitions = written
-            else:
-                # a re-cluster never evolves the schema: carry the marker
-                schema_dir = old_m["schema_dir"]
-                partitions = dict(old_m["partitions"])
-                partitions.update(written)
-            manifest = {
-                "key": key,
-                "n_buckets": B,
-                "partitions": partitions,
-                "schema_dir": schema_dir,
-            }
-            # carry the recorded schema; for pre-r14 manifests only the
-            # full rewrite knows the true union schema (an incremental
-            # pass read just the touched buckets)
-            if old_m.get("schema"):
-                manifest["schema"] = old_m["schema"]
-            elif buckets is None:
-                manifest["schema"] = base_schema
-            zone_cols = (old_m or {}).get("zone_cols")
-            if zone_cols:
-                manifest["zone_cols"] = zone_cols
-                zones = (
-                    {}
-                    if buckets is None
-                    else {
-                        b: z
-                        for b, z in old_m.get("zones", {}).items()
-                        if b in partitions and b not in written
-                    }
-                )
-                zones.update(self._bucket_zones(spark, stage_dir, zone_cols))
-                manifest["zones"] = zones
-                # untouched buckets' clustered files stay on disk, so
-                # their file-level stats carry regardless of whether
-                # THIS pass clusters (an unclustered incremental
-                # compaction must not blind the reader to them)
-                file_zones = (
-                    {}
-                    if buckets is None
-                    else {
-                        b: fz
-                        for b, fz in old_m.get("file_zones", {}).items()
-                        if b in partitions and b not in written
-                    }
-                )
-                if zorder_cols:
-                    # rows are clustered within each bucket, so per-file
-                    # stats are tight -- record them and read_pruned
-                    # prunes FILES inside surviving buckets (the layout
-                    # lever for range probes on a hash-bucketed table;
-                    # pair with writer_options={"maxRecordsPerFile": N}
-                    # to control the clustering granularity)
-                    file_zones.update(
-                        self._file_zones(spark, stage_dir, tdir, zone_cols)
-                    )
-                if file_zones:
-                    manifest["file_zones"] = file_zones
-            self._write_manifest(name, v, manifest)
-            self._commit(name, v)
-            return v
+            # a re-cluster never evolves the schema: the incremental
+            # form carries the marker (``_evolved_schema_dir`` finds no
+            # new column), the full form re-stamps the same schema
+            return self._write_buckets(
+                name, v, out, key, B, old_m.get("zone_cols"),
+                base=old_m, replaced=buckets, cluster=bool(zorder_cols),
+                writer_options=writer_options,
+            )
 
     def maintain_clustering(
         self,
@@ -1182,74 +1231,17 @@ class ParquetTableStore:
         if m is None or "key" not in m:
             raise ValueError(f"table {name!r} is not partitioned; use overwrite()")
         key, B = m["key"], m["n_buckets"]
-        tdir = self._table_dir(name)
         keys = rows.select(key).cache()
         try:
-            touched = sorted(
-                r[0] for r in keys.select(self.bucket_expr(key, B).alias("b")).distinct().collect()
-            )
+            touched = self._bucket_ids(keys, key, B)
             if not touched:
                 return v
-            old_paths = [
-                os.path.join(tdir, m["partitions"][str(b)])
-                for b in touched
-                if str(b) in m["partitions"]
-            ]
-            if old_paths:
-                old_rows = self._read_parquet(
-                    spark, old_paths, self._manifest_schema(m)
-                )
-                new_rows = old_rows.unionByName(rows, allowMissingColumns=True)
-            else:
-                new_rows = rows
-            nv = v + 1
-            with self._claimed(name, nv):
-                stage = f"w{nv}-{uuid.uuid4().hex[:8]}"
-                stage_dir = os.path.join(tdir, stage)
-                (
-                    new_rows.withColumn("__part", self.bucket_expr(key, B))
-                    .write.partitionBy("__part")
-                    .parquet(stage_dir)
-                )
-                written = {
-                    entry.split("=", 1)[1]: f"{stage}/{entry}"
-                    for entry in os.listdir(stage_dir)
-                    if entry.startswith("__part=")
-                }
-                partitions = dict(m["partitions"])
-                partitions.update(written)
-                schema_dir, schema_json = self._evolved_schema_dir(
-                    spark, tdir, m, rows, stage
-                )
-                manifest = {
-                    "key": key,
-                    "n_buckets": B,
-                    "partitions": partitions,
-                    "schema_dir": schema_dir,
-                    "schema": schema_json,
-                }
-                zone_cols = m.get("zone_cols")
-                if zone_cols:
-                    zones = {
-                        b: z
-                        for b, z in m.get("zones", {}).items()
-                        if b not in written
-                    }
-                    zones.update(self._bucket_zones(spark, stage_dir, zone_cols))
-                    manifest["zone_cols"] = zone_cols
-                    manifest["zones"] = zones
-                    # rewritten buckets lose file-level granularity until
-                    # the next optimize; untouched ones keep theirs
-                    file_zones = {
-                        b: fz
-                        for b, fz in m.get("file_zones", {}).items()
-                        if b not in written
-                    }
-                    if file_zones:
-                        manifest["file_zones"] = file_zones
-                self._write_manifest(name, nv, manifest)
-                self._commit(name, nv)
-                return nv
+            return self._rewrite_buckets(
+                spark, name, v, m, touched,
+                lambda old: rows
+                if old is None
+                else old.unionByName(rows, allowMissingColumns=True),
+            )
         finally:
             keys.unpersist()
 
@@ -1273,39 +1265,10 @@ class ParquetTableStore:
         key, old_b = spec
         if n_buckets == old_b:
             return self.current_version(name)
-        df = self.read(spark, name)
-        v = self.current_version(name) + 1
-        with self._claimed(name, v):
-            tdir = self._table_dir(name)
-            stage = f"w{v}-{uuid.uuid4().hex[:8]}"
-            stage_dir = os.path.join(tdir, stage)
-            (
-                df.withColumn("__part", self.bucket_expr(key, n_buckets))
-                .write.partitionBy("__part")
-                .parquet(stage_dir)
-            )
-            schema_dir = f"{stage}-schema"
-            df.limit(0).write.parquet(os.path.join(tdir, schema_dir))
-            partitions = {
-                entry.split("=", 1)[1]: f"{stage}/{entry}"
-                for entry in os.listdir(stage_dir)
-                if entry.startswith("__part=")
-            }
-            manifest = {
-                "key": key,
-                "n_buckets": n_buckets,
-                "partitions": partitions,
-                "schema_dir": schema_dir,
-                "schema": df.schema.jsonValue(),
-            }
-            old_m = self._read_manifest(name, v - 1)
-            zone_cols = (old_m or {}).get("zone_cols")
-            if zone_cols:
-                manifest["zone_cols"] = zone_cols
-                manifest["zones"] = self._bucket_zones(spark, stage_dir, zone_cols)
-            self._write_manifest(name, v, manifest)
-            self._commit(name, v)
-            return v
+        # a full overwrite under the new spec; it carries zone_cols
+        return self.overwrite(
+            name, self.read(spark, name), partition_key=key, n_buckets=n_buckets
+        )
 
     def merge(
         self,
@@ -1348,7 +1311,6 @@ class ParquetTableStore:
         if m is None or "key" not in m:
             raise ValueError(f"table {name!r} is not partitioned; use overwrite()")
         key, B = m["key"], m["n_buckets"]
-        tdir = self._table_dir(name)
 
         # no .distinct() on the key set: duplicates don't change the
         # anti-join, and dropping it removes a shuffle -- only the
@@ -1362,93 +1324,17 @@ class ParquetTableStore:
             touched = (
                 sorted({int(x) for x in touched_buckets})
                 if touched_buckets is not None
-                else sorted(
-                    r[0]
-                    for r in keys.select(
-                        self.bucket_expr(key, B).alias("b")
-                    ).distinct().collect()
-                )
+                else self._bucket_ids(keys, key, B)
             )
             if not touched:
                 return v
-            old_paths = [
-                os.path.join(tdir, m["partitions"][str(b)])
-                for b in touched
-                if str(b) in m["partitions"]
-            ]
-            if old_paths:
-                # manifest schema (r14+): buckets straddling an ADD
-                # COLUMN read under the union schema with NULLs for
-                # missing columns, no footer sweep; pre-r14 manifests
-                # fall back to mergeSchema
-                old_rows = self._read_parquet(
-                    spark, old_paths, self._manifest_schema(m)
-                )
-                kept = old_rows.join(F.broadcast(keys), on=key, how="left_anti")
-                new_rows = kept.unionByName(upserts, allowMissingColumns=True)
-            else:
-                new_rows = upserts
-
-            nv = v + 1
-            with self._claimed(name, nv):
-                stage = f"w{nv}-{uuid.uuid4().hex[:8]}"
-                stage_dir = os.path.join(tdir, stage)
-                (
-                    new_rows.withColumn("__part", self.bucket_expr(key, B))
-                    .write.partitionBy("__part")
-                    .parquet(stage_dir)
-                )
-                written = {
-                    entry.split("=", 1)[1]: f"{stage}/{entry}"
-                    for entry in os.listdir(stage_dir)
-                    if entry.startswith("__part=")
-                }
-                stray = set(written) - {str(b) for b in touched}
-                if stray:
-                    shutil.rmtree(stage_dir, ignore_errors=True)
-                    raise ValueError(
-                        f"merge into {name!r}: upsert rows hash into buckets "
-                        f"{sorted(stray, key=int)} missing from touched_buckets; "
-                        "committing would drop those buckets' stored rows"
-                    )
-                partitions = dict(m["partitions"])
-                for b in touched:
-                    partitions.pop(str(b), None)  # bucket may have emptied
-                partitions.update(written)
-                schema_dir, schema_json = self._evolved_schema_dir(
-                    spark, tdir, m, new_rows, stage
-                )
-                manifest = {
-                    "key": key,
-                    "n_buckets": B,
-                    "partitions": partitions,
-                    "schema_dir": schema_dir,
-                    "schema": schema_json,
-                }
-                zone_cols = m.get("zone_cols")
-                if zone_cols:
-                    # untouched buckets keep their stats; rewritten ones
-                    # recompute from the staged files only
-                    zones = {
-                        b: z
-                        for b, z in m.get("zones", {}).items()
-                        if b in partitions and b not in written
-                    }
-                    zones.update(self._bucket_zones(spark, stage_dir, zone_cols))
-                    manifest["zone_cols"] = zone_cols
-                    manifest["zones"] = zones
-                    # rewritten buckets lose file-level granularity until
-                    # the next optimize; untouched ones keep theirs
-                    file_zones = {
-                        b: fz
-                        for b, fz in m.get("file_zones", {}).items()
-                        if b in partitions and b not in written
-                    }
-                    if file_zones:
-                        manifest["file_zones"] = file_zones
-                self._write_manifest(name, nv, manifest)
-                self._commit(name, nv)
-                return nv
+            return self._rewrite_buckets(
+                spark, name, v, m, touched,
+                lambda old: upserts
+                if old is None
+                else old.join(F.broadcast(keys), on=key, how="left_anti")
+                .unionByName(upserts, allowMissingColumns=True),
+            )
         finally:
             if touched_buckets is None:
                 keys.unpersist()

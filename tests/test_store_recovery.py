@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from sfguide_intro_to_cdc_using_snowflake_postgres_connector_dynamic_tables_spark.streaming.store import (
@@ -218,6 +219,57 @@ def test_failed_write_releases_claim_for_retry(spark, tmp_path):
     store.overwrite("t", spark.range(20))
     assert store.current_version("t") == 2
     assert store.read(spark, "t").count() == 20
+
+
+_PARTITIONED_WRITES = {
+    "overwrite": lambda spark, s, ups: s.overwrite(
+        "t", ups, partition_key="k", n_buckets=4
+    ),
+    "merge": lambda spark, s, ups: s.merge(spark, "t", ups, ups.select("k")),
+    "append": lambda spark, s, ups: s.append(spark, "t", ups),
+    "optimize": lambda spark, s, ups: s.optimize(spark, "t"),
+    "optimize_buckets": lambda spark, s, ups: s.optimize(spark, "t", buckets=[0, 1]),
+    "rebucket": lambda spark, s, ups: s.rebucket(spark, "t", 2),
+}
+
+
+@pytest.mark.parametrize("op", sorted(_PARTITIONED_WRITES))
+def test_failed_partitioned_write_releases_claim_for_retry(
+    spark, tmp_path, monkeypatch, op
+):
+    """Every partitioned writer fails cleanly AFTER its staged write:
+    the claim is released, the table is unchanged, an immediate retry
+    commits, and the retry's GC removes the failed attempt's stage."""
+    store = ParquetTableStore(str(tmp_path / "s"))
+    base = spark.range(40).select(
+        F.col("id").alias("k"), (F.col("id") * 10).alias("v")
+    )
+    store.overwrite("t", base, partition_key="k", n_buckets=4, zone_cols=["v"])
+    before = sorted(store.read(spark, "t").collect())
+    tdir = str(tmp_path / "s" / "t")
+    stages_before = {e for e in os.listdir(tdir) if e.startswith("w")}
+    ups = spark.createDataFrame([(1, 999), (50, 500)], "k long, v long")
+    write = _PARTITIONED_WRITES[op]
+
+    class Boom(RuntimeError):
+        pass
+
+    def fail(*_args, **_kwargs):
+        raise Boom("manifest write failed")
+
+    monkeypatch.setattr(store, "_write_manifest", fail)
+    with pytest.raises(Boom):
+        write(spark, store, ups)
+    monkeypatch.undo()
+    orphans = {e for e in os.listdir(tdir) if e.startswith("w")} - stages_before
+    assert orphans  # the failure came after the staged write
+    assert not os.path.exists(store._claim_path("t", 2))
+    assert store.current_version("t") == 1
+    assert sorted(store.read(spark, "t").collect()) == before
+
+    assert write(spark, store, ups) == 2
+    assert store.current_version("t") == 2
+    assert not orphans & set(os.listdir(tdir))
 
 
 def test_two_writer_retry_loops_converge(spark, tmp_path):

@@ -110,6 +110,28 @@ def test_rebucket_and_optimize_keep_zones(spark, tmp_path):
     assert m.get("zone_cols") == ["v", "d"] and set(m["zones"]) == set(m["partitions"])
     got = sorted(r["id"] for r in store.read_pruned(spark, "t", "v", 100, 120).collect())
     assert got == [10, 11, 12]
+    # append rewrites only the receiving bucket: it restates that
+    # bucket's zones and drops its file_zones; every other bucket keeps
+    # both exactly
+    store.optimize(spark, "t", zorder_cols=["d"])
+    m1 = store._read_manifest("t", store.current_version("t"))
+    assert set(m1["file_zones"]) == set(m1["partitions"])
+    extra = spark.createDataFrame(
+        [(3, 5000, dt.date(2030, 1, 1))], "id long, v long, d date"
+    )
+    store.append(spark, "t", extra)
+    m2 = store._read_manifest("t", store.current_version("t"))
+    rewritten = {b for b in m2["partitions"] if m2["partitions"][b] != m1["partitions"][b]}
+    assert len(rewritten) == 1 and set(m2["zones"]) == set(m2["partitions"])
+    for b in m2["partitions"]:
+        if b in rewritten:
+            assert m2["zones"][b]["v"][1] == 5000
+            assert b not in m2.get("file_zones", {})
+        else:
+            assert m2["zones"][b] == m1["zones"][b]
+            assert m2["file_zones"][b] == m1["file_zones"][b]
+    got = sorted(r["id"] for r in store.read_pruned(spark, "t", "v", 4000, None).collect())
+    assert got == [3]
 
 
 def test_table_without_zone_cols_scans_everything(spark, tmp_path):
