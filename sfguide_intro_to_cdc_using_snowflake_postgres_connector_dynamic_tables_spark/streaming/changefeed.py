@@ -586,19 +586,8 @@ class CDCPipeline:
             else F.col(f.name)
             for f in cur.schema.fields
         ]
-        out = cur.select(*cols)
-        spec = self.store.partition_spec(table)
-        if spec:
-            _key, n_buckets = spec
-            self.store.overwrite(
-                table,
-                out,
-                partition_key=self.primary_keys[table],
-                n_buckets=n_buckets,
-                zone_cols=self.zone_spec.get(table),
-            )
-        else:
-            self.store.overwrite(table, out)
+        # overwrite keeps the stored partition spec and zone_cols
+        self.store.overwrite(table, cur.select(*cols))
 
     # -- snapshot-LSN offset persistence ------------------------------------
 

@@ -14,7 +14,7 @@ a foreachBatch sink doing the store merge.
 Scale shape of the content dedup: the seen-fingerprint set lives in
 its own ``<table>__fp`` companion table, hash-bucketed on
 ``content_fp``.  Each micro-batch anti-joins against ONLY the fp
-buckets its own fingerprints hash into (``store.read_buckets``), so
+buckets its own fingerprints hash into (``store.read_key_buckets``), so
 the per-tick read cost is O(batch buckets) -- matching the
 O(delta-buckets) writes of the partitioned upsert -- instead of a
 corpus-sized fingerprint scan per batch.
@@ -43,15 +43,33 @@ def fp_table_name(table: str) -> str:
     return f"{table}__fp"
 
 
+def _append_absent(
+    store: ParquetTableStore,
+    spark: SparkSession,
+    name: str,
+    rows: DataFrame,
+    cols: list[str],
+) -> None:
+    """Append to the index ``name`` only the ``rows`` whose ``cols``
+    it does not hold yet, anti-joined against just the buckets
+    ``rows`` hash into (O(batch)): a replayed or retried batch
+    re-appends nothing."""
+    stored = store.read_key_buckets(spark, name, rows)
+    if stored is not None:
+        rows = rows.join(stored.select(*cols), cols, "left_anti")
+    store.append(spark, name, rows)
+
+
 def _seen_fps_for_batch(
     store: ParquetTableStore,
     spark: SparkSession,
     table: str,
     keep: DataFrame,
     n_buckets: int,
-) -> DataFrame:
+) -> DataFrame | None:
     """The store-side fingerprints this batch could possibly collide
-    with: only the fp buckets the batch's own fingerprints hash into.
+    with: only the fp buckets the batch's own fingerprints hash into
+    (None for an empty batch).
 
     The companion table is backfilled once from the main table for
     stores created before it existed (a one-time O(table) pass that
@@ -64,15 +82,7 @@ def _seen_fps_for_batch(
             partition_key="content_fp",
             n_buckets=n_buckets,
         )
-    _key, B = store.partition_spec(fp_name)
-    # <= B distinct bucket ids -- bounded by the bucket count, not the batch
-    batch_buckets = [
-        r[0]
-        for r in keep.select(store.bucket_expr("content_fp", B).alias("b"))
-        .distinct()
-        .collect()
-    ]
-    return store.read_buckets(spark, fp_name, batch_buckets)
+    return store.read_key_buckets(spark, fp_name, keep)
 
 
 def bands_table_name(
@@ -152,16 +162,9 @@ def _cross_pairs(
         F.col("doc_id").alias("stored_id"),
         F.lit(1.0).alias("jaccard"),
     ).limit(0)
-    _key, B = store.partition_spec(bands_name)
-    batch_buckets = [
-        r[0]
-        for r in new_bands.select(store.bucket_expr("band", B).alias("b"))
-        .distinct()
-        .collect()
-    ]
-    if not batch_buckets:
+    stored_bands = store.read_key_buckets(spark, bands_name, new_bands)
+    if stored_bands is None:
         return empty
-    stored_bands = store.read_buckets(spark, bands_name, batch_buckets)
     if exclude_batch_ids:
         stored_bands = stored_bands.join(
             new_docs.select("doc_id"), "doc_id", "left_anti"
@@ -174,21 +177,12 @@ def _cross_pairs(
     if cand.isEmpty():
         return empty
     # fetch ONLY the candidate stored docs (bucket-pruned by the
-    # main table's doc_id partitioning when available)
+    # main table's doc_id partitioning when available; cand is
+    # non-empty, so the probe is never None)
     cand_ids = cand.select(F.col("stored_id").alias("doc_id")).distinct()
-    spec = store.partition_spec(table)
-    if spec is not None:
-        _mk, MB = spec
-        id_buckets = [
-            r[0]
-            for r in cand_ids.select(store.bucket_expr("doc_id", MB).alias("b"))
-            .distinct()
-            .collect()
-        ]
-        stored_docs = store.read_buckets(spark, table, id_buckets)
-    else:
-        stored_docs = store.read(spark, table)
-    stored_docs = stored_docs.join(cand_ids, "doc_id", "left_semi")
+    stored_docs = store.read_key_buckets(spark, table, cand_ids).join(
+        cand_ids, "doc_id", "left_semi"
+    )
 
     # exact token-set Jaccard verify of candidate pairs (same token
     # definition and arithmetic as dedup.lsh_pairs_from_tokens, so an
@@ -293,8 +287,11 @@ def near_dup_incremental(
     )
     pairs = intra.unionByName(cross)
     if update_index:
-        # eager: the next increment must see this one's band keys
-        store.append(spark, bands_name, new_bands)
+        # eager: the next increment must see this one's band keys.  A
+        # retried call finds its own band rows already indexed (the
+        # probe above excludes them); appending them again would grow
+        # the index per retry
+        _append_absent(store, spark, bands_name, new_bands, ["doc_id", "band"])
     return pairs
 
 
@@ -508,18 +505,9 @@ def decontaminate_incremental(
         new_train = grams.filter(F.col("split") == "train")
 
         # direction 1: new train docs vs (stored + batch) test grams
-        _k, TB = store.partition_spec(tg)
-        probe_buckets = [
-            r[0]
-            for r in new_train.select(store.bucket_expr("gram", TB).alias("b"))
-            .distinct()
-            .collect()
-        ]
-        stored_test = (
-            store.read_buckets(spark, tg, probe_buckets)
-            if probe_buckets
-            else new_test.select("gram").limit(0)
-        )
+        stored_test = store.read_key_buckets(spark, tg, new_train)
+        if stored_test is None:
+            stored_test = new_test.select("gram").limit(0)
         bench = stored_test.select("gram").unionByName(
             new_test.select("gram")
         ).distinct()
@@ -528,15 +516,8 @@ def decontaminate_incremental(
         )
 
         # direction 2 (retro): new test grams vs stored train postings
-        _k2, RB = store.partition_spec(rg)
-        retro_buckets = [
-            r[0]
-            for r in new_test.select(store.bucket_expr("gram", RB).alias("b"))
-            .distinct()
-            .collect()
-        ]
-        if retro_buckets:
-            stored_train = store.read_buckets(spark, rg, retro_buckets)
+        stored_train = store.read_key_buckets(spark, rg, new_test)
+        if stored_train is not None:
             contaminated_stored = (
                 stored_train.join(new_test.select("gram").distinct(), "gram")
                 .select("doc_id")
@@ -564,21 +545,9 @@ def decontaminate_incremental(
             # grows with history instead of with distinct grams.  The
             # anti-join is bucket-pruned to the batch's own gram
             # buckets, so it stays O(batch), the increment contract.
-            batch_test = new_test.select("gram").distinct()
-            append_buckets = [
-                r[0]
-                for r in batch_test.select(
-                    store.bucket_expr("gram", TB).alias("b")
-                )
-                .distinct()
-                .collect()
-            ]
-            if append_buckets:
-                already = store.read_buckets(spark, tg, append_buckets)
-                batch_test = batch_test.join(
-                    already.select("gram"), "gram", "left_anti"
-                )
-            store.append(spark, tg, batch_test)
+            _append_absent(
+                store, spark, tg, new_test.select("gram").distinct(), ["gram"]
+            )
             clean_train = new_train.join(
                 contaminated_batch, "doc_id", "left_anti"
             ).select("doc_id", "gram")
@@ -589,22 +558,7 @@ def decontaminate_incremental(
             # (consumers end in distinct) but the index grows per
             # replay.  Anti-join on the composite key, bucket-pruned to
             # the batch's own gram buckets -- still O(batch).
-            clean_buckets = [
-                r[0]
-                for r in clean_train.select(
-                    store.bucket_expr("gram", RB).alias("b")
-                )
-                .distinct()
-                .collect()
-            ]
-            if clean_buckets:
-                stored_rg = store.read_buckets(spark, rg, clean_buckets)
-                clean_train = clean_train.join(
-                    stored_rg.select("doc_id", "gram"),
-                    ["doc_id", "gram"],
-                    "left_anti",
-                )
-            store.append(spark, rg, clean_train)
+            _append_absent(store, spark, rg, clean_train, ["doc_id", "gram"])
             # retro-flagged stored postings stay in the index: their
             # docs are already reported (re-reports are harmless and
             # only occur if callers keep flagged docs anyway)
@@ -671,19 +625,7 @@ def _write_semantic_index(
         # re-append is a no-op instead of duplicate index growth
         # (cell assignment is deterministic per doc, so (doc_id, cell)
         # identifies the row)
-        _k, B = store.partition_spec(name)
-        probe = [
-            r[0]
-            for r in idx.select(store.bucket_expr("cell", B).alias("b"))
-            .distinct()
-            .collect()
-        ]
-        if probe:
-            already = store.read_buckets(spark, name, probe).select(
-                "doc_id", "cell"
-            )
-            idx = idx.join(already, ["doc_id", "cell"], "left_anti")
-        store.append(spark, name, idx)
+        _append_absent(store, spark, name, idx, ["doc_id", "cell"])
 
 
 def _semantic_filter(
@@ -755,32 +697,27 @@ def _semantic_filter(
 
         # (b) probe ONLY the stored cell buckets this batch touches
         assigned = assign_cells(kept_emb, centroids, "embedding", out_col="cell")
-        _key, B = store.partition_spec(cells_name)
-        batch_buckets = [
-            r[0]
-            for r in assigned.select(store.bucket_expr("cell", B).alias("b"))
-            .distinct()
-            .collect()
-        ]
-        # a REPLAYED batch may already be in the cell index (appends
-        # commit before the fp batch-done marker); a doc must never
-        # semantically match its own stored copy
-        stored_idx = store.read_buckets(spark, cells_name, batch_buckets).join(
-            new_rows.select("doc_id"), "doc_id", "left_anti"
-        )
         both = assigned.select(
             F.col("doc_id").alias("id"),
             F.col("embedding").alias("v"),
             F.lit("T").alias("side"),
             "cell",
-        ).unionByName(
-            stored_idx.select(
-                F.col("doc_id").alias("id"),
-                F.col("embedding").alias("v"),
-                F.lit("B").alias("side"),
-                "cell",
-            )
         )
+        stored_idx = store.read_key_buckets(spark, cells_name, assigned)
+        if stored_idx is not None:
+            # a REPLAYED batch may already be in the cell index (appends
+            # commit before the fp batch-done marker); a doc must never
+            # semantically match its own stored copy
+            both = both.unionByName(
+                stored_idx.join(
+                    new_rows.select("doc_id"), "doc_id", "left_anti"
+                ).select(
+                    F.col("doc_id").alias("id"),
+                    F.col("embedding").alias("v"),
+                    F.lit("B").alias("side"),
+                    "cell",
+                )
+            )
         cross_dups = (
             cross_cell_hits(both, threshold)
             .filter(F.col("contaminated"))
@@ -944,7 +881,9 @@ def ingest_batch(
                 )
             return
         seen = _seen_fps_for_batch(store, spark, table, keep, n_buckets)
-        new_rows = keep.join(seen, "content_fp", "left_anti")
+        new_rows = (
+            keep if seen is None else keep.join(seen, "content_fp", "left_anti")
+        )
         if near_dup:
             new_rows = _near_dup_filter(
                 store,
@@ -989,21 +928,7 @@ def ingest_batch(
                 band_rows = band_keys_for_docs(
                     new_rows, num_hashes=num_hashes, band_size=band_size, wide=wide
                 )
-                _kb, BB = store.partition_spec(bn)
-                probe = [
-                    r[0]
-                    for r in band_rows.select(
-                        store.bucket_expr("band", BB).alias("b")
-                    ).distinct().collect()
-                ]
-                if probe:
-                    already = store.read_buckets(spark, bn, probe).select(
-                        "doc_id", "band"
-                    )
-                    band_rows = band_rows.join(
-                        already, ["doc_id", "band"], "left_anti"
-                    )
-                store.append(spark, bn, band_rows)
+                _append_absent(store, spark, bn, band_rows, ["doc_id", "band"])
             if semantic and sem_centroids is not None:
                 # centroids threaded from _semantic_filter (no re-read);
                 # None means no quantizer exists yet (nothing embeddable

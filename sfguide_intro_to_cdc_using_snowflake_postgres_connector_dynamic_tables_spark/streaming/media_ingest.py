@@ -256,14 +256,7 @@ def ingest_media_batch(
             )
 
         # exact tier: probe only the fp buckets the batch hashes into
-        _k, FB = store.partition_spec(fp_name)
-        fp_buckets = [
-            r[0]
-            for r in keep.select(store.bucket_expr("content_fp", FB).alias("b"))
-            .distinct()
-            .collect()
-        ]
-        seen = store.read_buckets(spark, fp_name, fp_buckets) if fp_buckets else None
+        seen = store.read_key_buckets(spark, fp_name, keep)
         new_rows = keep.join(seen, "content_fp", "left_anti") if seen is not None else keep
 
         # perceptual tier: probe only the band buckets the batch hashes
@@ -286,15 +279,9 @@ def ingest_media_batch(
                 _band_keys(F.col("phash_new"), n_bands, F.col("modality"))
             ).alias("band"),
         )
-        _k2, BB = store.partition_spec(idx_name)
-        band_buckets = [
-            r[0]
-            for r in new_bands.select(store.bucket_expr("band", BB).alias("b"))
-            .distinct()
-            .collect()
-        ]
-        if band_buckets:
-            stored = store.read_buckets(spark, idx_name, band_buckets).select(
+        stored = store.read_key_buckets(spark, idx_name, new_bands)
+        if stored is not None:
+            stored = stored.select(
                 F.col("band"),
                 F.col("media_id").alias("media_id_old"),
                 F.col("phash").alias("phash_old"),
@@ -338,20 +325,10 @@ def ingest_media_batch(
             # merge.  Every crash point now replays to the exact
             # no-crash state (tests/test_media_crash_replay.py).
             idx_rows = _index_rows(new_rows, n_bands)
-            _k3, IB = store.partition_spec(idx_name)
-            idx_buckets = [
-                r[0]
-                for r in idx_rows.select(store.bucket_expr("band", IB).alias("b"))
-                .distinct()
-                .collect()
-            ]
-            if idx_buckets:
-                already = store.read_buckets(spark, idx_name, idx_buckets).select(
-                    "media_id", "modality", "phash", "band"
-                )
-                idx_rows = idx_rows.join(
-                    already, ["media_id", "modality", "phash", "band"], "left_anti"
-                )
+            already = store.read_key_buckets(spark, idx_name, idx_rows)
+            if already is not None:
+                cols = ["media_id", "modality", "phash", "band"]
+                idx_rows = idx_rows.join(already.select(*cols), cols, "left_anti")
             store.append(spark, idx_name, idx_rows)
             store.merge(spark, table, new_rows, new_rows.select("media_id"))
             fps = new_rows.select("content_fp")

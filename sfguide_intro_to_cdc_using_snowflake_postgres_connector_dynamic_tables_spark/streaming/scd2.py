@@ -185,8 +185,7 @@ class SCD2Tracker:
                     h, scd2_apply(None, delta, key), partition_key=key
                 )
                 continue
-            spec = store.partition_spec(h)
-            if spec is None:
+            if store.partition_spec(h) is None:
                 # pre-r8 unpartitioned history: one last full rewrite,
                 # re-seeding the bucketed layout so every later batch
                 # takes the merge path
@@ -196,21 +195,11 @@ class SCD2Tracker:
                     partition_key=key,
                 )
                 continue
-            _, n_buckets = spec
             touched_keys = delta.select(key).distinct()
-            bucket_ids = [
-                r[0]
-                for r in touched_keys.select(
-                    store.bucket_expr(key, n_buckets).alias("b")
-                )
-                .distinct()
-                .collect()  # bounded by n_buckets
-            ]
-            if not bucket_ids:
+            hist = store.read_key_buckets(spark, h, touched_keys)
+            if hist is None:
                 continue
-            hist_touched = store.read_buckets(spark, h, bucket_ids).join(
-                touched_keys, key, "left_semi"
-            )
+            hist_touched = hist.join(touched_keys, key, "left_semi")
             folded = scd2_apply(hist_touched, delta, key)
             store.merge(spark, h, upserts=folded, touched_keys=touched_keys)
 

@@ -524,22 +524,43 @@ class ParquetTableStore:
                 continue
         return pinned
 
-    def bucket_paths(self, name: str, bucket_ids) -> list[str]:
-        """Data directories of the given hash buckets in the current
-        version (buckets with no rows have no directory and are
-        skipped).  Raises on unpartitioned tables."""
+    def _current_manifest(self, name: str) -> tuple[int, dict | None]:
+        """(current version, its manifest) -- ONE version resolve and
+        ONE manifest read, so a probe's bucket count, paths and schema
+        all describe the same version even while a writer commits."""
         v = self.current_version(name)
         if v is None:
             raise FileNotFoundError(f"table {name!r} has no committed version under {self.root}")
-        m = self._read_manifest(name, v)
+        return v, self._read_manifest(name, v)
+
+    def _partitioned_manifest(self, name: str) -> dict:
+        _v, m = self._current_manifest(name)
         if m is None or "key" not in m:
             raise ValueError(f"table {name!r} is not partitioned")
+        return m
+
+    def _manifest_bucket_paths(self, name: str, m: dict, bucket_ids) -> list[str]:
         tdir = self._table_dir(name)
         return [
             os.path.join(tdir, m["partitions"][str(b)])
             for b in bucket_ids
             if str(b) in m["partitions"]
         ]
+
+    def _read_manifest_buckets(
+        self, spark: SparkSession, name: str, m: dict, bucket_ids
+    ) -> DataFrame:
+        paths = self._manifest_bucket_paths(name, m, bucket_ids)
+        paths.append(os.path.join(self._table_dir(name), m["schema_dir"]))
+        return self._read_parquet(spark, paths, self._manifest_schema(m))
+
+    def bucket_paths(self, name: str, bucket_ids) -> list[str]:
+        """Data directories of the given hash buckets in the current
+        version (buckets with no rows have no directory and are
+        skipped).  Raises on unpartitioned tables."""
+        return self._manifest_bucket_paths(
+            name, self._partitioned_manifest(name), bucket_ids
+        )
 
     # -- zone maps (per-bucket min/max pruning on NON-KEY columns) -----------
 
@@ -748,14 +769,32 @@ class ParquetTableStore:
         is still a readable DataFrame).  This is the read-side mirror of
         ``merge``'s O(delta-buckets) writes: a consumer that knows which
         key buckets it cares about pays I/O proportional to those
-        buckets, not to the table."""
-        v = self.current_version(name)
-        m = self._read_manifest(name, v) if v is not None else None
+        buckets, not to the table.  A consumer holding KEYS rather than
+        bucket ids calls ``read_key_buckets``, which hashes them under
+        the same manifest it reads."""
+        return self._read_manifest_buckets(
+            spark, name, self._partitioned_manifest(name), bucket_ids
+        )
+
+    def read_key_buckets(
+        self, spark: SparkSession, name: str, keys: DataFrame
+    ) -> DataFrame | None:
+        """The stored rows of every hash bucket that the partition-key
+        column of ``keys`` (same column name as the table's key) hashes
+        into -- the probe a batch anti-/semi-joins against, with I/O
+        bounded by the batch's own buckets.  The bucket layout stays
+        the store's decision: key, bucket count, paths and schema all
+        come from ONE manifest read, and the ids from one collect of
+        <= n_buckets rows.  Returns None when ``keys`` is empty (no
+        bucket to read -- callers skip their join).  An unpartitioned
+        table is read whole, without the collect."""
+        v, m = self._current_manifest(name)
         if m is None or "key" not in m:
-            raise ValueError(f"table {name!r} is not partitioned")
-        paths = self.bucket_paths(name, bucket_ids)
-        paths.append(os.path.join(self._table_dir(name), m["schema_dir"]))
-        return self._read_parquet(spark, paths, self._manifest_schema(m))
+            return self._read_version(spark, name, v)
+        ids = self._bucket_ids(keys, m["key"], m["n_buckets"])
+        if not ids:
+            return None
+        return self._read_manifest_buckets(spark, name, m, ids)
 
     def versions(self, name: str) -> list[int]:
         """Committed versions still readable on disk, oldest first.
@@ -1064,12 +1103,7 @@ class ParquetTableStore:
         rows yet -- to those buckets' new rows, which are staged and
         committed as ``v + 1``."""
         key, B = m["key"], m["n_buckets"]
-        tdir = self._table_dir(name)
-        old_paths = [
-            os.path.join(tdir, m["partitions"][str(b)])
-            for b in touched
-            if str(b) in m["partitions"]
-        ]
+        old_paths = self._manifest_bucket_paths(name, m, touched)
         # manifest schema (r14+): buckets straddling an ADD COLUMN read
         # under the union schema with NULLs for missing columns, no
         # footer sweep; pre-r14 manifests fall back to mergeSchema

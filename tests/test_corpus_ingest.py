@@ -61,12 +61,12 @@ def test_corpus_ingest_stream(spark, tmp_path):
     assert store.partition_spec("corpus") is not None
 
 
-def test_corpus_ingest_fp_index_bucket_pruned(spark, tmp_path):
+def test_corpus_ingest_fp_index_bucket_pruned(spark, tmp_path, monkeypatch):
     """The content-dedup anti-join reads only the fp buckets the batch's
     fingerprints hash into -- a strict subset of the index -- mirroring
-    the O(delta-buckets) write contract of the partitioned store."""
-    from pyspark.sql import functions as F
-
+    the O(delta-buckets) write contract of the partitioned store.  The
+    paths are recorded from the store's own parquet reads during the
+    second ingest, so any full-index scan would show up."""
     from sfguide_intro_to_cdc_using_snowflake_postgres_connector_dynamic_tables_spark.streaming.corpus_ingest import (
         fp_table_name,
         ingest_batch,
@@ -83,21 +83,32 @@ def test_corpus_ingest_fp_index_bucket_pruned(spark, tmp_path):
     assert store.exists(fp)
     _key, B = store.partition_spec(fp)
     all_paths = set(store.bucket_paths(fp, range(B)))
+    fp_dir = os.path.join(store.root, fp)
+    marker = os.path.join(
+        fp_dir, store._read_manifest(fp, store.current_version(fp))["schema_dir"]
+    )
 
+    read_paths = []
+    real_read = ParquetTableStore._read_parquet
+    monkeypatch.setattr(
+        store,
+        "_read_parquet",
+        lambda spark, paths, schema: read_paths.extend(paths)
+        or real_read(spark, paths, schema),
+    )
     b2 = spark.createDataFrame(
         [(100, rows[0][1], "en"),  # dup content of doc 0
          (101, f"{GOOD} a genuinely new document body for batch two", "en")],
         "doc_id long, text string, lang string",
     )
-    batch_fps = b2.select(F.md5(F.encode(F.col("text"), "UTF-8")).alias("content_fp"))
-    batch_buckets = [
-        r[0] for r in batch_fps.select(
-            store.bucket_expr("content_fp", B).alias("b")).distinct().collect()
-    ]
-    read_paths = set(store.bucket_paths(fp, batch_buckets))
-    assert read_paths < all_paths  # strict subset: pruned, not a full scan
-
     ingest_batch(store, spark, b2, min_quality=0.2)
+    monkeypatch.undo()
+    fp_reads = {
+        p for p in read_paths if p.startswith(fp_dir + os.sep) and p != marker
+    }
+    assert fp_reads  # the probe did read the batch's buckets
+    assert fp_reads < all_paths  # strict subset: pruned, not a full scan
+
     got = {r["doc_id"] for r in store.read(spark, "corpus").collect()}
     assert got == set(range(40)) | {101}  # dup dropped, new doc stored
     fp_rows = store.read(spark, fp).count()

@@ -61,10 +61,10 @@ def _envelope(spark, records, txn=False):
     return spark.createDataFrame(rows, schema)
 
 
-def _seeded_pipeline(spark, tmp_path, partitioned=False):
+def _seeded_pipeline(spark, tmp_path, partitioned=False, zone_spec=None):
     store = ParquetTableStore(str(tmp_path / "store"))
     spec = {"customers": 8} if partitioned else None
-    p = CDCPipeline(spark, store, partition_spec=spec)
+    p = CDCPipeline(spark, store, partition_spec=spec, zone_spec=zone_spec)
     seed = spark.createDataFrame(
         [tuple(_customer_row(i).values()) for i in range(1, 4)],
         CUSTOMERS_SCHEMA,
@@ -213,7 +213,8 @@ def test_type_widening_int_to_bigint(spark, tmp_path, partitioned):
     widen the runtime parse schema AND cast-rewrite the stored table
     once (parquet mergeSchema cannot reconcile int32/int64 files), so
     post-DDL rows carrying > 2^31 values land losslessly."""
-    p, store = _seeded_pipeline(spark, tmp_path, partitioned)
+    zone_spec = {"customers": ["age"]} if partitioned else None
+    p, store = _seeded_pipeline(spark, tmp_path, partitioned, zone_spec)
     big = 3_000_000_000  # does not fit an int32
     batch = [
         {"op": "S", "lsn": 10, "table": "customers", "row": None,
@@ -232,8 +233,10 @@ def test_type_widening_int_to_bigint(spark, tmp_path, partitioned):
     assert got[1] == 30  # pre-widening row cast-preserved, not nulled
     if partitioned:
         # the one-time rewrite keeps the bucket layout (O(delta)
-        # merges continue afterwards)
+        # merges continue afterwards) and the zone columns
         assert store.partition_spec("customers") == ("customer_id", 8)
+        m = store._read_manifest("customers", store.current_version("customers"))
+        assert m["zone_cols"] == ["age"] and m["zones"]
     # replaying the same micro-batch is a no-op for the widening too
     p.apply_envelope_batch(_envelope(spark, batch))
     out2 = store.read(spark, "customers")

@@ -168,6 +168,29 @@ def test_dropped_doc_index_rows_are_harmless(spark, tmp_path):
     assert got == want
 
 
+def test_retried_increment_keeps_index_size(spark, tmp_path):
+    """A retried call with the same new docs returns the same pairs
+    and leaves the band index at its size after the first call: the
+    index update is an upsert, not a blind append."""
+    docs = _docs(spark).limit(300)
+    cut = docs.approxQuantile("doc_id", [0.7], 0.0)[0]
+    stored = docs.filter(F.col("doc_id") <= cut)
+    delta = docs.filter(F.col("doc_id") > cut)
+
+    store = ParquetTableStore(str(tmp_path / "store"))
+    store.overwrite("corpus", stored, partition_key="doc_id", n_buckets=8)
+    bands = bands_table_name("corpus")
+    first = _pairs_set(
+        near_dup_incremental(store, spark, "corpus", delta, threshold=THRESH, n_buckets=8)
+    )
+    n_index = store.read(spark, bands).count()
+    second = _pairs_set(
+        near_dup_incremental(store, spark, "corpus", delta, threshold=THRESH, n_buckets=8)
+    )
+    assert store.read(spark, bands).count() == n_index
+    assert second == first
+
+
 def test_wide_slices_shape_and_recall(spark):
     """wide=True: 10-nibble slices from two salted digests -- distinct
     values per hash column, 10-char width, and full recall on planted

@@ -144,6 +144,36 @@ def test_empty_partitioned_table_keeps_schema(spark, tmp_path):
     assert set(out.columns) == {"k", "v"}
 
 
+def test_read_key_buckets(spark, tmp_path, monkeypatch):
+    """The store-side probe reads exactly the buckets its keys hash
+    into, from ONE manifest read; empty keys read nothing (None) and
+    an unpartitioned table is read whole."""
+    store = ParquetTableStore(str(tmp_path / "s"))
+    df = spark.range(100).select(F.col("id").alias("k"), (F.col("id") % 7).alias("v"))
+    store.overwrite("t", df, partition_key="k", n_buckets=8)
+    keys = spark.createDataFrame([(3,), (17,), (42,), (3,)], "k long")
+    ids = [r[0] for r in keys.select(store.bucket_expr("k", 8)).distinct().collect()]
+    want = store.read(spark, "t").filter(store.bucket_expr("k", 8).isin(ids))
+    got = store.read_key_buckets(spark, "t", keys)
+    assert _rows(got) == _rows(want)  # sorted row lists: multiset equality
+    assert 0 < got.count() < 100
+    assert store.read_key_buckets(spark, "t", keys.limit(0)) is None
+
+    reads = []
+    real = store._read_manifest
+    monkeypatch.setattr(
+        store, "_read_manifest", lambda name, v: reads.append(v) or real(name, v)
+    )
+    store.read_key_buckets(spark, "t", keys)
+    assert len(reads) == 1
+    store.read_buckets(spark, "t", ids)
+    assert len(reads) == 2
+    monkeypatch.undo()
+
+    store.overwrite("u", df)
+    assert _rows(store.read_key_buckets(spark, "u", keys)) == _rows(df)
+
+
 def test_crash_orphan_stage_is_invisible_and_gcd(spark, tmp_path):
     store = ParquetTableStore(str(tmp_path / "s"), keep_versions=2)
     df = spark.range(10).select(F.col("id").alias("k"), F.lit("x").alias("v"))
