@@ -10,10 +10,9 @@ without sink I/O).  Entries run in ``__spark_entry__.queries()`` order,
 the gate order; the cold pass bills each plan shape's
 one-time compile to the first entry in that order that uses it.
 
-Two side drives print their own JSON line instead:
+One side drive prints its own JSON line instead:
 ``--scaling-cores`` (data-bound subset on replicated inputs; run at two
-``SPARK_GRAFT_CPUS`` settings to read core scaling) and
-``--soak-media`` (media front-door ingest soak and probe-I/O table).
+``SPARK_GRAFT_CPUS`` settings to read core scaling).
 """
 
 from __future__ import annotations
@@ -174,176 +173,6 @@ def _bench_cdc(
         return time.perf_counter() - t0
 
 
-def _soak_media(
-    spark,
-    ticks: int = 10,
-    rows_per_tick: int = 60,
-    n_buckets: int = 64,
-    probe_corpus: int = 600,
-    probe_buckets: int = 256,
-    probe_deltas: tuple = (2, 8, 24),
-) -> dict:
-    """Media front-door soak (VERDICT r11 item 4): the text front door
-    has a measured dense-soak; this is the media twin.  Two parts:
-
-    1. SLO soak: ``ticks`` micro-batches of MIXED-modality payloads
-       (images / WAV / AVI + planted exact dups, perceptual dups and
-       undecodables) through the real ``start_media_ingest`` stream --
-       sustained rows/min, per-tick write->drained lag percentiles,
-       and a standalone decode-gate throughput pass.
-    2. Probe-I/O table (mirrors the r11 text-index measurement): on a
-       ``probe_corpus``-row store indexed at ``probe_buckets`` band
-       buckets, for each delta size record the band buckets probed and
-       index rows read -- linear in delta, independent of corpus size.
-    """
-    import statistics
-    import tempfile
-
-    import numpy as _np
-    import pandas as _pd
-    from pyspark.sql import functions as F
-
-    from sfguide_intro_to_cdc_using_snowflake_postgres_connector_dynamic_tables_spark.operators.multimodal import (
-        MEDIA_SCHEMA,
-        encode_avi,
-        encode_ppm,
-        encode_wav,
-        perceptual_hash_sets,
-    )
-    from sfguide_intro_to_cdc_using_snowflake_postgres_connector_dynamic_tables_spark.streaming.media_ingest import (
-        _band_keys,
-        _hash_pass,
-        ingest_media_batch,
-        phash_index_table,
-        start_media_ingest,
-    )
-    from sfguide_intro_to_cdc_using_snowflake_postgres_connector_dynamic_tables_spark.streaming.store import (
-        ParquetTableStore,
-    )
-
-    def _img(seed: int, size: int = 24) -> _np.ndarray:
-        rng = _np.random.default_rng(seed)
-        return rng.integers(0, 256, (size, size, 3), dtype=_np.uint8)
-
-    def _payloads(base: int, n: int) -> list[tuple[int, str, bytes]]:
-        """n mixed rows: ~60% images, 20% audio, 13% video, plus one
-        exact dup, one noised near-dup and one undecodable per tick."""
-        out: list[tuple[int, str, bytes]] = []
-        t = _np.arange(3000)
-        for i in range(n):
-            mid = base + i
-            r = i % 15
-            if r < 9:
-                out.append((mid, "image", encode_ppm(_img(mid))))
-            elif r < 12:
-                tone = (3000 * _np.sin(2 * _np.pi * (200 + mid % 900) * t / 8000)).astype(
-                    _np.int16
-                )
-                out.append((mid, "audio", encode_wav(tone, 8000)))
-            elif r == 12:
-                frames = _np.stack([_img(mid * 31 + j) for j in range(4)], axis=0)
-                out.append((mid, "video", encode_avi(frames)))
-            elif r == 13:
-                out.append((mid, "junk", b"not media"))
-            else:
-                # exact dup of an earlier row in this tick
-                out.append((mid, out[0][1], out[0][2]))
-        # one perceptual near-dup (noised copy of the first image)
-        px = _img(base).astype(int)
-        px[::7, ::7] = (px[::7, ::7] + 4) % 256
-        out.append((base + n, "image", encode_ppm(px.astype(_np.uint8))))
-        return out
-
-    def _df(rows):
-        return spark.createDataFrame(
-            _pd.DataFrame(
-                {
-                    "media_id": [r[0] for r in rows],
-                    "media_type": [r[1] for r in rows],
-                    "payload": [bytearray(r[2]) for r in rows],
-                    "meta": None,
-                }
-            ),
-            MEDIA_SCHEMA,
-        )
-
-    root = tempfile.mkdtemp(prefix="media_soak_")
-    feed, ckpt = f"{root}/feed", f"{root}/ckpt"
-    store = ParquetTableStore(f"{root}/store")
-
-    # --- part 1: SLO soak through the real stream -------------------
-    lags, total_rows = [], 0
-    t_all = time.perf_counter()
-    for tick in range(ticks):
-        rows = _payloads(100_000 + tick * 1_000, rows_per_tick)
-        total_rows += len(rows)
-        _df(rows).write.mode("append").parquet(feed)
-        t0 = time.perf_counter()
-        q = start_media_ingest(
-            spark, feed, store, ckpt, n_buckets=n_buckets
-        )
-        q.awaitTermination(600)
-        q.stop()
-        lags.append(time.perf_counter() - t0)
-    soak_wall = time.perf_counter() - t_all
-    stored = store.read(spark, "media").count()
-
-    # --- decode-gate throughput (standalone, same kernels) ----------
-    dec_rows = _payloads(900_000, 300)
-    t0 = time.perf_counter()
-    n_dec = perceptual_hash_sets(_df(dec_rows), decode="auto").count()
-    decode_wall = time.perf_counter() - t0
-
-    # --- part 2: probe I/O vs delta (r11 text-index methodology) ----
-    pstore = ParquetTableStore(f"{root}/probe_store")
-    boot = _payloads(500_000, probe_corpus)
-    ingest_media_batch(pstore, spark, _df(boot), n_buckets=probe_buckets)
-    idx_name = phash_index_table("media", 8)
-    idx_total = pstore.read(spark, idx_name).count()
-    probe_rows = {}
-    for delta in probe_deltas:
-        batch = _df(_payloads(700_000 + delta * 10_000, delta))
-        keep = _hash_pass(batch, "auto", 8)
-        bands = keep.select(
-            "modality",
-            F.explode("phashes").alias("ph"),
-        ).select(
-            F.explode(_band_keys(F.col("ph"), 8, F.col("modality"))).alias("band")
-        )
-        _k, BB = pstore.partition_spec(idx_name)
-        buckets = [
-            r[0]
-            for r in bands.select(pstore.bucket_expr("band", BB).alias("b"))
-            .distinct()
-            .collect()
-        ]
-        read_rows = (
-            pstore.read_buckets(spark, idx_name, buckets).count()
-            if buckets
-            else 0
-        )
-        probe_rows[str(delta)] = {
-            "buckets_probed": len(buckets),
-            "buckets_total": probe_buckets,
-            "index_rows_read": read_rows,
-            "index_rows_total": idx_total,
-        }
-
-    lags_s = sorted(lags)
-    return {
-        "ticks": ticks,
-        "rows_per_tick": rows_per_tick + 1,
-        "rows_total": total_rows,
-        "rows_stored": stored,
-        "rows_per_min": round(total_rows / soak_wall * 60.0, 1),
-        "lag_p50_sec": round(statistics.median(lags_s), 2),
-        "lag_p95_sec": round(lags_s[max(0, int(len(lags_s) * 0.95) - 1)], 2),
-        "lag_max_sec": round(lags_s[-1], 2),
-        "decode_rows_per_sec": round(n_dec / decode_wall, 1),
-        "probe_io": probe_rows,
-    }
-
-
 def _bench_databound_scaled(
     spark, sf_dir: str, factor: int = 10
 ) -> dict:
@@ -491,14 +320,6 @@ def main() -> None:
             "cpus": int(os.environ.get("SPARK_GRAFT_CPUS", "32")),
             **_bench_databound_scaled(spark, sf_dir, factor),
         }))
-        spark.stop()
-        return
-
-    if "--soak-media" in sys.argv:
-        # media front-door soak (VERDICT r11 item 4): sustained
-        # mixed-modality ingest rate + lag SLO + probe-I/O-vs-delta
-        # table; results recorded in SCALE.md "media front door soak"
-        print(json.dumps({"metric": "media_soak", **_soak_media(spark)}))
         spark.stop()
         return
 

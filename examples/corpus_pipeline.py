@@ -103,30 +103,21 @@ def main() -> None:
     # 6. split-partitioned write -> reading one split prunes the others
     final.write.mode("overwrite").partitionBy("split").parquet(out_dir)
 
-    # 7. the NEXT batch arrives: dedup the increment against the
-    # persisted corpus via the stored band index -- probe I/O is
-    # O(delta x bucket), the corpus is never re-scanned (the
-    # alternative is re-running full LSH over corpus+delta per batch)
-    from sfguide_intro_to_cdc_using_snowflake_postgres_connector_dynamic_tables_spark.streaming.corpus_ingest import (
-        near_dup_incremental,
-    )
-    from sfguide_intro_to_cdc_using_snowflake_postgres_connector_dynamic_tables_spark.streaming.store import (
-        ParquetTableStore,
-    )
-
-    store = ParquetTableStore(os.path.join(out_dir, "_store"))
-    store.overwrite(
-        "corpus", final.select("doc_id", "text"),
-        partition_key="doc_id", n_buckets=8,
-    )
-    some = final.select("doc_id", "text").limit(2).collect()
+    # 7. the NEXT batch arrives: its near-dup edges are the pairs a
+    # batch MinHash-LSH over corpus + increment emits that include an
+    # increment doc
+    corpus_docs = final.select("doc_id", "text")
+    some = corpus_docs.limit(2).collect()
     delta = spark.createDataFrame(
         [(900000 + i, r["text"]) for i, r in enumerate(some)]  # re-submissions
         + [(900100, "a genuinely new document about spark shuffles")],
         "doc_id long, text string",
     )
-    inc_pairs = near_dup_incremental(store, spark, "corpus", delta, n_buckets=8)
-    print("== increment vs stored corpus (band-index probe, no rescan) ==")
+    delta_ids = [r["doc_id"] for r in delta.select("doc_id").collect()]
+    inc_pairs = dedup.minhash_lsh_pairs(corpus_docs.unionByName(delta)).filter(
+        F.col("doc_a").isin(delta_ids) | F.col("doc_b").isin(delta_ids)
+    )
+    print("== increment vs corpus (near-dup pairs touching the increment) ==")
     inc_pairs.show(truncate=False)
     dup_new = inc_pairs.select(
         F.greatest("doc_a", "doc_b").alias("doc_id")

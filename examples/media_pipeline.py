@@ -118,43 +118,6 @@ def main() -> None:
         audio_fingerprints(clips), max_dist=4, hash_col="afp"
     ).show()
 
-    # -- streaming front door: the same tiers run per micro-batch
-    # against persisted fingerprint + pHash band indexes --
-    import tempfile
-
-    from sfguide_intro_to_cdc_using_snowflake_postgres_connector_dynamic_tables_spark.streaming.media_ingest import (
-        start_media_ingest,
-    )
-    from sfguide_intro_to_cdc_using_snowflake_postgres_connector_dynamic_tables_spark.streaming.store import (
-        ParquetTableStore,
-    )
-
-    print("== streaming media ingest (exact + perceptual dedup per tick) ==")
-    with tempfile.TemporaryDirectory() as tmp:
-        from sfguide_intro_to_cdc_using_snowflake_postgres_connector_dynamic_tables_spark.operators.multimodal import (
-            encode_bmp,
-            encode_ppm,
-        )
-
-        feed, ckpt = f"{tmp}/feed", f"{tmp}/ckpt"
-        store = ParquetTableStore(f"{tmp}/store")
-        img = rng.randint(0, 256, size=(32, 32, 3), dtype=np.uint8)
-        batch = spark.createDataFrame(
-            [
-                (500, "image", bytearray(encode_ppm(img)), None),
-                (501, "image", bytearray(encode_bmp(img)), None),      # re-encode
-                (502, "image", bytearray(b"corrupt bytes"), None),     # decode gate
-            ],
-            MEDIA_SCHEMA,
-        )
-        batch.write.mode("append").parquet(feed)
-        q = start_media_ingest(spark, feed, store, ckpt)
-        q.awaitTermination(120)
-        q.stop()
-        kept = sorted(
-            r["media_id"] for r in store.read(spark, "media").select("media_id").collect()
-        )
-        print(f"ingested {kept} (re-encode + corrupt payload dropped)")
     spark.stop()
 
 

@@ -166,8 +166,8 @@ def leakage_safe_split_increment(
     checkpoint: str = "local",
 ) -> DataFrame:
     """Maintain a leakage-safe split under corpus increments: new docs
-    and new near-dup edges (e.g. from
-    ``corpus_ingest.near_dup_incremental``) arrive, and a new edge may
+    and new near-dup edges (e.g. the pairs of a ``minhash_lsh_pairs``
+    run that touch a new doc) arrive, and a new edge may
     MERGE two clusters already assigned to DIFFERENT splits -- the
     silent train/test leak a per-batch recompute would paper over by
     flipping docs a model may already have consumed.
@@ -290,15 +290,12 @@ def resplit_epoch(
     while the cluster-shares-one-split invariant (straddling_pairs=0)
     holds by construction.  The salt must then be threaded to every
     consumer of the split -- increments
-    (:func:`leakage_safe_split_increment`), decontamination
-    (``decontaminate(salt=...)``,
-    ``corpus_ingest.decontaminate_incremental(salt=...)`` -- which
-    re-keys its persisted gram indexes to the new epoch) -- or they
-    silently check the OLD wall.
+    (:func:`leakage_safe_split_increment`) and decontamination
+    (``decontaminate(salt=...)``) -- or they silently check the OLD
+    wall.
 
     ``salt`` must be non-empty: the empty string is the pre-epoch
-    default and a "re-split" to it would collide with epoch-untagged
-    index names."""
+    default, so a "re-split" to it would reproduce the old split."""
     if not salt:
         raise ValueError("resplit_epoch requires a non-empty epoch salt")
     return leakage_safe_split_state(

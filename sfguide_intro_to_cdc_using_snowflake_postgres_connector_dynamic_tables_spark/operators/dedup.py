@@ -76,27 +76,6 @@ def _token_set(docs: DataFrame, text_col: str, id_col: str) -> DataFrame:
     )
 
 
-#: Version tag of the minhash/band computation, stamped into the NAME
-#: of every persisted band-index table (``corpus_ingest.bands_table_name``).
-#: BUMP THIS whenever ``_minhash_min_exprs``, ``_token_set`` or the band
-#: hash in ``band_keys_for_docs``/``lsh_pairs_from_tokens`` changes in a
-#: way that alters band-key values: a persisted index written under the
-#: old scheme would otherwise be probed with keys that can never match,
-#: silently missing already-indexed near-dups.  With the scheme in the
-#: table name, upgraded code simply doesn't find the old index and
-#: rebuilds from the main table (the existing one-time backfill path);
-#: the stale index is never probed.  "mh2" = k disjoint 5-nibble slices
-#: of one md5 per token (round 10); the retired salted-md5 scheme is
-#: implicitly "mh1".
-BAND_SCHEME = "mh2"
-
-
-def band_scheme(wide: bool = False) -> str:
-    """Scheme tag for a given slice width -- the string persisted-index
-    names carry (see ``BAND_SCHEME``)."""
-    return BAND_SCHEME + ("w" if wide else "")
-
-
 #: Documented safe ceiling for the NARROW (5-nibble, 2^20-space) slice
 #: scheme: per-doc distinct-token count n.  A band of 2 narrow slices
 #: false-fires between unrelated docs at ~(n/2^20)^2 per pair -- at
@@ -111,9 +90,8 @@ NARROW_MAX_TOKENS = 1 << 16
 def observed_max_tokens(tok: DataFrame, id_col: str = "doc_id") -> int:
     """Max distinct-token count over a (doc_id, token) set table --
     ONE count-only aggregation (map-side partial, |docs| shuffle rows).
-    Index owners call this once at index-creation time to pin the
-    slice scheme (``wide = observed_max_tokens(tok) > NARROW_MAX_TOKENS``)
-    in the persisted index's name."""
+    ``wide='auto'`` runs it to pick the slice scheme
+    (``wide = observed_max_tokens(tok) > narrow_max_tokens``)."""
     row = tok.groupBy(id_col).count().agg(F.max("count")).first()
     return int(row[0] or 0)
 
@@ -217,72 +195,6 @@ def minhash_lsh_pairs(
         tok, num_hashes, band_size, threshold, blocks, wide,
         narrow_max_tokens, pin,
     )
-
-
-def band_keys_for_docs(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    num_hashes: int = 6,
-    band_size: int = 2,
-    wide: bool = False,
-    narrow_max_tokens: int | None = NARROW_MAX_TOKENS,
-) -> DataFrame:
-    """(doc_id, band) LSH band keys for each doc -- byte-identical to
-    the bands ``lsh_pairs_from_tokens`` builds internally (same
-    md5-slice minhash, same band hash), exposed for INDEXED near-dup
-    lookups: a streaming ingest stores these rows in a band-bucketed
-    index table and each batch probes only its own bands' buckets.
-
-    ``wide`` must be a RESOLVED bool here (no ``'auto'``): the slice
-    scheme is pinned in the persisted index's NAME
-    (``corpus_ingest.bands_table_name``), so per-batch auto-switching
-    would write keys the index can never match.  Resolve once at index
-    creation: ``observed_max_tokens(tok) > NARROW_MAX_TOKENS``.  Under
-    the narrow scheme the plan carries a zero-extra-pass guard
-    (``raise_error`` folded into the first band expression): a doc
-    past ``narrow_max_tokens`` distinct tokens fails the batch loudly
-    instead of silently degrading LSH bucket quality."""
-    if wide == "auto":
-        raise ValueError(
-            "band_keys_for_docs feeds a persisted index whose slice scheme "
-            "is pinned in the index name; resolve wide once at index "
-            "creation (observed_max_tokens(tok) > NARROW_MAX_TOKENS) and "
-            "pass the resolved bool"
-        )
-    tok = _token_set(docs, text_col, id_col)
-    guard = not wide and narrow_max_tokens is not None
-    if guard:
-        sig = tok.groupBy("doc_id").agg(
-            *_minhash_min_exprs(num_hashes, wide),
-            F.count(F.lit(1)).alias("__n"),
-        )
-    else:
-        sig = minhash_signatures(tok, num_hashes, wide)
-    n_bands = num_hashes // band_size
-    exprs = []
-    for b in range(n_bands):
-        cols = [F.col(f"h{b * band_size + j + 1}") for j in range(band_size)]
-        exprs.append(F.md5(F.encode(F.concat(*cols), "UTF-8")))
-    if guard:
-        # every row evaluates every band expr inside the explode array,
-        # so guarding the first one covers the whole row
-        exprs[0] = F.when(
-            F.col("__n") <= F.lit(narrow_max_tokens), exprs[0]
-        ).otherwise(
-            F.raise_error(
-                F.concat(
-                    F.lit("a document has "),
-                    F.col("__n").cast("string"),
-                    F.lit(
-                        " distinct tokens, past the narrow 5-nibble slice "
-                        f"bound ({narrow_max_tokens}): rebuild the band "
-                        "index with wide=True"
-                    ),
-                )
-            )
-        )
-    return sig.select(id_col, F.explode(F.array(*exprs)).alias("band"))
 
 
 def lsh_pairs_from_tokens(

@@ -1228,14 +1228,9 @@ def perceptual_hashes(media: DataFrame, decode: str = "auto") -> DataFrame:
     64-bit signature per row -- image -> DCT pHash, audio -> spectral
     fingerprint, video -> pHash of the FIRST frame (robust to
     re-encode/noise; a leading-frames trim evades it -- use
-    :func:`perceptual_hash_sets` for a bounded multi-frame signature,
-    or :func:`video_hash_seq` for the full positional sequence).  Rows
+    :func:`video_hash_seq` for the full positional sequence).  Rows
     that parse as none of the real formats yield NULL under
-    ``decode='auto'`` and raise otherwise.
-
-    Feeds the streaming media front door's band index; hashes of
-    different modalities live in disjoint band namespaces there, so an
-    audio fingerprint can never collide with an image hash."""
+    ``decode='auto'`` and raise otherwise."""
 
     def _one(payload, declared: str):
         b = bytes(payload) if payload is not None else None
@@ -1280,100 +1275,6 @@ def perceptual_hashes(media: DataFrame, decode: str = "auto") -> DataFrame:
                 T.StructField("media_id", T.LongType(), False),
                 T.StructField("modality", T.StringType(), True),
                 T.StructField("phash", T.LongType(), True),
-            ]
-        ),
-    )
-
-
-def sampled_frame_indices(n_frames: int, max_frames: int) -> list[int]:
-    """Deterministic even sample of frame indices, first and LAST
-    frame always included (``unique(linspace(0, n-1, max))``): the
-    bounded signature a trimmed/extended copy still overlaps with --
-    the property the single-frame-0 hash lacks (trim the lead and
-    frame 0 changes)."""
-    if n_frames <= 0:
-        return []
-    if max_frames <= 0:
-        raise ValueError(f"max_frames must be >= 1, got {max_frames}")
-    if n_frames <= max_frames:
-        return list(range(n_frames))
-    return sorted(
-        {int(i) for i in np.linspace(0, n_frames - 1, max_frames)}
-    )
-
-
-def perceptual_hash_sets(
-    media: DataFrame, decode: str = "auto", max_video_frames: int = 8
-) -> DataFrame:
-    """Modality-dispatched perceptual hash SET per row: image -> [DCT
-    pHash], audio -> [spectral fingerprint], video -> the DISTINCT
-    pHashes of up to ``max_video_frames`` evenly-sampled frames
-    (:func:`sampled_frame_indices`).
-
-    The multi-hash video signature is what survives a leading-frames
-    trim: the trimmed copy's sampled frames still intersect the stored
-    sample, so a band-index probe on ANY hash catches it -- frame-0
-    pHash alone (:func:`perceptual_hashes`) is evaded by dropping the
-    first frame.  Per-row output stays BOUNDED at ``max_video_frames``
-    hashes, so index rows per video are O(max_video_frames x n_bands)
-    regardless of duration; precise positional overlap (a shared
-    black frame is NOT a near-dup verdict here) remains the batch
-    operator :func:`video_near_dup`'s job.
-
-    Rows decoding as no supported format yield NULL under
-    ``decode='auto'`` and raise otherwise."""
-
-    def _one(payload, declared):
-        b = bytes(payload) if payload is not None else None
-        try:
-            return "image", [phash_bits(decode_image(b))]
-        except (ValueError, TypeError):
-            pass
-        try:
-            samples, _r, _c = decode_wav(b)
-            return "audio", [audio_fingerprint_bits(samples)]
-        except (ValueError, TypeError):
-            pass
-        try:
-            frames, _fps = decode_avi(b)
-            if frames.shape[0]:
-                out, seen = [], set()
-                for i in sampled_frame_indices(
-                    frames.shape[0], max_video_frames
-                ):
-                    h = phash_bits(frames[i])
-                    if h not in seen:
-                        seen.add(h)
-                        out.append(h)
-                return "video", out
-        except (ValueError, TypeError):
-            pass
-        if decode != "auto":
-            raise ValueError(f"payload decodes as no supported format ({declared})")
-        return None, None
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            mods, hashes = [], []
-            for payload, declared in zip(pdf["payload"], pdf["media_type"]):
-                m, hs = _one(payload, declared)
-                mods.append(m)
-                hashes.append(hs)
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "modality": mods,
-                    "phashes": hashes,
-                }
-            )
-
-    return media.mapInPandas(
-        batches,
-        T.StructType(
-            [
-                T.StructField("media_id", T.LongType(), False),
-                T.StructField("modality", T.StringType(), True),
-                T.StructField("phashes", T.ArrayType(T.LongType()), True),
             ]
         ),
     )

@@ -43,21 +43,6 @@ DEFAULT_CONF: dict[str, str] = {
     # Parquet filter pushdown is on by default; pin it so a config drift
     # can't silently turn scans into full reads.
     "spark.sql.parquet.filterPushdown": "true",
-    # Streaming state lives in RocksDB, not the default HDFS-backed
-    # in-memory map: the in-memory provider holds every key of every
-    # stateful operator on-heap per executor, which collapses at
-    # 100 TB-scale key cardinalities (dedup markers, session windows);
-    # RocksDB spills to local SSD with bounded memory and incremental
-    # checkpointing.  Bundled with Spark 4 -- verified working in this
-    # runtime (tests/test_stateful_streaming.py runs under it).
-    # Upgrade note: a stateful query's checkpoint is bound to the
-    # provider that wrote it -- restarting a pre-existing HDFS-backed
-    # checkpoint needs this key overridden back via get_spark(conf=...)
-    # (new checkpoints should use RocksDB).
-    "spark.sql.streaming.stateStore.providerClass": (
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider"
-    ),
 }
 
 

@@ -1,8 +1,8 @@
 """Batch and streaming sources.
 
 - ``testdata``  -- the driver's TPC-H-ish parquet star schema.
-- ``cdc_schemas`` -- explicit schemas for the reference's 4 CDC tables
-  and the change-feed envelope (FIXTURES.md sections 1-2).
+- ``cdc_schemas`` -- explicit schemas and primary keys of the
+  reference's 4 CDC tables (FIXTURES.md section 1).
 - ``fixtures``  -- seeded synthetic generator for the reference-shaped
   tables (customers/merchants/products/transactions) used by CDC and
   dashboard tests.

@@ -1,8 +1,7 @@
 """Explicit schemas for the reference's CDC domain.
 
-Mirrors the Postgres DDL (reference ``scripts/postgresql_setup.sql:9-42``)
-and the change-feed envelope design (SURVEY.md section 2.9 /
-FIXTURES.md section 2).  Money stays DoubleType on purpose -- the
+Mirrors the Postgres DDL (reference ``scripts/postgresql_setup.sql:9-42``,
+FIXTURES.md section 1).  Money stays DoubleType on purpose -- the
 reference stores ``price``/``total_price`` as ``double precision``
 (``scripts/postgresql_setup.sql:28,39``) and oracle-matching requires
 reproducing that, footgun and all.
@@ -70,21 +69,3 @@ PRIMARY_KEYS: dict[str, str] = {
     "products": "product_id",
     "transactions": "transaction_id",
 }
-
-
-def envelope_schema(after_schema: T.StructType) -> T.StructType:
-    """CDC change-feed envelope for one table (FIXTURES.md section 2).
-
-    ``op`` in {'I','U','D'}; ``lsn`` is the monotone commit offset
-    (apply order per key); ``after`` carries the full row for I/U and
-    PK-only for D.  Arrival order = commit order -- no event-time or
-    watermark semantics, by construction (SURVEY.md section 2.9).
-    """
-    return T.StructType(
-        [
-            T.StructField("op", T.StringType(), False),
-            T.StructField("lsn", T.LongType(), False),
-            T.StructField("commit_ts", T.TimestampType(), True),
-            T.StructField("after", after_schema, True),
-        ]
-    )

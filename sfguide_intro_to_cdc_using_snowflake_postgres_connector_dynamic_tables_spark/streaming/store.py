@@ -289,8 +289,8 @@ class ParquetTableStore:
         union-schema marker under ``stage`` (so empty / fully-pruned
         reads see the evolved column set) and return its dir; otherwise
         carry the manifest's marker forward.  Called only by
-        ``_write_buckets`` for its incremental form, so merge(),
-        append() and optimize(buckets=...) share ONE evolution rule
+        ``_write_buckets`` for its incremental form, so merge() and
+        optimize(buckets=...) share ONE evolution rule
         that can never diverge between them (ADVICE r4).  Returns
         ``(schema_dir, schema_json)``
         with the (possibly evolved) union schema for the new manifest;
@@ -524,17 +524,14 @@ class ParquetTableStore:
                 continue
         return pinned
 
-    def _current_manifest(self, name: str) -> tuple[int, dict | None]:
-        """(current version, its manifest) -- ONE version resolve and
-        ONE manifest read, so a probe's bucket count, paths and schema
-        all describe the same version even while a writer commits."""
+    def _partitioned_manifest(self, name: str) -> dict:
+        """The current version's manifest -- ONE version resolve and ONE
+        manifest read, so a read's paths and schema describe the same
+        version even while a writer commits."""
         v = self.current_version(name)
         if v is None:
             raise FileNotFoundError(f"table {name!r} has no committed version under {self.root}")
-        return v, self._read_manifest(name, v)
-
-    def _partitioned_manifest(self, name: str) -> dict:
-        _v, m = self._current_manifest(name)
+        m = self._read_manifest(name, v)
         if m is None or "key" not in m:
             raise ValueError(f"table {name!r} is not partitioned")
         return m
@@ -553,14 +550,6 @@ class ParquetTableStore:
         paths = self._manifest_bucket_paths(name, m, bucket_ids)
         paths.append(os.path.join(self._table_dir(name), m["schema_dir"]))
         return self._read_parquet(spark, paths, self._manifest_schema(m))
-
-    def bucket_paths(self, name: str, bucket_ids) -> list[str]:
-        """Data directories of the given hash buckets in the current
-        version (buckets with no rows have no directory and are
-        skipped).  Raises on unpartitioned tables."""
-        return self._manifest_bucket_paths(
-            name, self._partitioned_manifest(name), bucket_ids
-        )
 
     # -- zone maps (per-bucket min/max pruning on NON-KEY columns) -----------
 
@@ -660,7 +649,7 @@ class ParquetTableStore:
         each surviving bucket instead of the whole bucket directory --
         the layout answer to hash-bucketed fact tables where every
         bucket contains every date and bucket-level stats stop
-        pruning.  Buckets rewritten by a later ``merge``/``append``
+        pruning.  Buckets rewritten by a later ``merge``
         lose file granularity until the next optimize (standard
         compaction model); they fall back to whole-directory reads."""
         # paths and schema must come from ONE version read: a writer
@@ -769,32 +758,10 @@ class ParquetTableStore:
         is still a readable DataFrame).  This is the read-side mirror of
         ``merge``'s O(delta-buckets) writes: a consumer that knows which
         key buckets it cares about pays I/O proportional to those
-        buckets, not to the table.  A consumer holding KEYS rather than
-        bucket ids calls ``read_key_buckets``, which hashes them under
-        the same manifest it reads."""
+        buckets, not to the table."""
         return self._read_manifest_buckets(
             spark, name, self._partitioned_manifest(name), bucket_ids
         )
-
-    def read_key_buckets(
-        self, spark: SparkSession, name: str, keys: DataFrame
-    ) -> DataFrame | None:
-        """The stored rows of every hash bucket that the partition-key
-        column of ``keys`` (same column name as the table's key) hashes
-        into -- the probe a batch anti-/semi-joins against, with I/O
-        bounded by the batch's own buckets.  The bucket layout stays
-        the store's decision: key, bucket count, paths and schema all
-        come from ONE manifest read, and the ids from one collect of
-        <= n_buckets rows.  Returns None when ``keys`` is empty (no
-        bucket to read -- callers skip their join).  An unpartitioned
-        table is read whole, without the collect."""
-        v, m = self._current_manifest(name)
-        if m is None or "key" not in m:
-            return self._read_version(spark, name, v)
-        ids = self._bucket_ids(keys, m["key"], m["n_buckets"])
-        if not ids:
-            return None
-        return self._read_manifest_buckets(spark, name, m, ids)
 
     def versions(self, name: str) -> list[int]:
         """Committed versions still readable on disk, oldest first.
@@ -1031,8 +998,8 @@ class ParquetTableStore:
             partitions = written
         else:
             # only merge's caller-supplied touched_buckets can miss a
-            # staged bucket: append and optimize derive ``replaced``
-            # from the very rows they stage
+            # staged bucket: optimize derives ``replaced`` from the
+            # very rows it stages
             stray = set(written) - set(replaced)
             if stray:
                 shutil.rmtree(stage_dir, ignore_errors=True)
@@ -1097,11 +1064,10 @@ class ParquetTableStore:
     def _rewrite_buckets(
         self, spark: SparkSession, name: str, v: int, m: dict, touched: list[int], combine
     ) -> int:
-        """Incremental write shared by ``merge`` and ``append``:
-        ``combine`` maps the rows the ``touched`` buckets of version
-        ``v`` (manifest ``m``) store -- None when none of them holds
-        rows yet -- to those buckets' new rows, which are staged and
-        committed as ``v + 1``."""
+        """Incremental write of ``merge``: ``combine`` maps the rows
+        the ``touched`` buckets of version ``v`` (manifest ``m``) store
+        -- None when none of them holds rows yet -- to those buckets'
+        new rows, which are staged and committed as ``v + 1``."""
         key, B = m["key"], m["n_buckets"]
         old_paths = self._manifest_bucket_paths(name, m, touched)
         # manifest schema (r14+): buckets straddling an ADD COLUMN read
@@ -1195,7 +1161,7 @@ class ParquetTableStore:
         have coarsened, when enough of the table has degraded.
 
         The signal is the manifest itself -- a bucket rewritten by
-        ``merge``/``append`` loses its ``file_zones`` entry (its files
+        ``merge`` loses its ``file_zones`` entry (its files
         no longer cover tight value ranges), so the fraction of
         buckets WITHOUT file-level stats is exactly the fraction of
         the table where a range probe pays full-bucket I/O.  When that
@@ -1250,34 +1216,6 @@ class ParquetTableStore:
             "rewritten": coarse,
             "version": nv,
         }
-
-    def append(self, spark: SparkSession, name: str, rows: DataFrame) -> int:
-        """Bucket-pruned APPEND into a partitioned table: like ``merge``
-        but without the delete-by-key step, for index tables whose
-        partition key is NOT unique (e.g. an LSH band index, where many
-        docs legitimately share a band value and an upsert-by-key merge
-        would evict them).  Only the buckets receiving new rows are
-        read and rewritten; every other bucket carries forward."""
-        v = self.current_version(name)
-        if v is None:
-            raise FileNotFoundError(f"append target {name!r} does not exist")
-        m = self._read_manifest(name, v)
-        if m is None or "key" not in m:
-            raise ValueError(f"table {name!r} is not partitioned; use overwrite()")
-        key, B = m["key"], m["n_buckets"]
-        keys = rows.select(key).cache()
-        try:
-            touched = self._bucket_ids(keys, key, B)
-            if not touched:
-                return v
-            return self._rewrite_buckets(
-                spark, name, v, m, touched,
-                lambda old: rows
-                if old is None
-                else old.unionByName(rows, allowMissingColumns=True),
-            )
-        finally:
-            keys.unpersist()
 
     def rebucket(self, spark: SparkSession, name: str, n_buckets: int) -> int:
         """Re-hash a partitioned table into a new bucket count.

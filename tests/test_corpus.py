@@ -284,28 +284,6 @@ def test_repetition_stats_planted(spark):
     assert out[3]["dup_bigram_fraction"] == 0.0
 
 
-def test_jsonl_corpus_quarantine(spark, tmp_path):
-    from sfguide_intro_to_cdc_using_snowflake_postgres_connector_dynamic_tables_spark.sources.jsonl_source import (
-        read_jsonl_corpus,
-        split_quarantine,
-    )
-
-    p = tmp_path / "corpus.jsonl"
-    p.write_text(
-        '{"doc_id": 1, "text": "hello world", "lang": "en", "source": "s1"}\n'
-        "this is not json at all\n"
-        '{"doc_id": 2, "text": "zweite zeile", "lang": "de", "source": "s1"}\n'
-        '{"doc_id": 3, "text": "truncated...\n'
-    )
-    df = read_jsonl_corpus(spark, str(p))
-    clean, bad = split_quarantine(df)
-    rows = {r["doc_id"]: r["text"] for r in clean.collect()}
-    assert rows == {1: "hello world", 2: "zweite zeile"}
-    bad_lines = sorted(r["raw_line"] for r in bad.collect())
-    assert len(bad_lines) == 2
-    assert any("not json" in l for l in bad_lines)
-
-
 def test_split_partitioned_corpus_write_prunes(spark, tmp_path):
     from pyspark.sql import functions as F
 

@@ -1,6 +1,6 @@
 """Incremental leakage-safe split maintenance (VERDICT r11 item 6).
 
-The risk being pinned: with ``near_dup_incremental`` landed, a new dup
+The risk being pinned: when a corpus grows by increments, a new dup
 edge can MERGE two clusters already assigned to different splits --
 silently re-introducing train/test leakage on increments.  The policy
 under test (``corpus.leakage_safe_split_increment``):

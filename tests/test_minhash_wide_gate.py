@@ -15,8 +15,7 @@ import pytest
 
 from sfguide_intro_to_cdc_using_snowflake_postgres_connector_dynamic_tables_spark.operators.dedup import (
     NARROW_MAX_TOKENS,
-    band_keys_for_docs,
-    band_scheme,
+    _minhash_min_exprs,
     minhash_lsh_pairs,
     minhash_signatures,
     observed_max_tokens,
@@ -85,8 +84,6 @@ def test_auto_stays_narrow_below_bound(spark, long_docs):
 
 
 def test_wide_scheme_tag_and_slice_width(spark, long_docs):
-    assert band_scheme(False) == "mh2"
-    assert band_scheme(True) == "mh2w"
     tok = _token_set(long_docs, "text", "doc_id")
     row = minhash_signatures(tok, wide=True).first()
     assert all(len(row[f"h{i}"]) == 10 for i in range(1, 7))
@@ -94,27 +91,38 @@ def test_wide_scheme_tag_and_slice_width(spark, long_docs):
     assert all(len(row[f"h{i}"]) == 5 for i in range(1, 7))
 
 
-def test_band_keys_rejects_auto(spark, long_docs):
-    with pytest.raises(ValueError, match="pinned in the index name"):
-        band_keys_for_docs(long_docs, wide="auto")
-
-
-def test_band_keys_plan_guard_fails_batch_loudly(spark, long_docs):
-    # the guard is raise_error folded into the band expressions: no
-    # extra pass, but any long doc fails the JOB with a clear message
-    with pytest.raises(Exception, match="distinct tokens"):
-        band_keys_for_docs(long_docs, narrow_max_tokens=20).collect()
-
-
-def test_band_keys_guard_passes_below_bound(spark, long_docs):
-    rows = band_keys_for_docs(long_docs, narrow_max_tokens=40).collect()
-    assert len(rows) == 3 * 3  # 3 docs x 3 bands (6 hashes / band_size 2)
-
-
 def test_default_bound_is_the_documented_constant():
     assert NARROW_MAX_TOKENS == 1 << 16
-    for fn in (minhash_lsh_pairs, band_keys_for_docs):
-        assert (
-            inspect.signature(fn).parameters["narrow_max_tokens"].default
-            == NARROW_MAX_TOKENS
-        )
+    assert (
+        inspect.signature(minhash_lsh_pairs).parameters["narrow_max_tokens"].default
+        == NARROW_MAX_TOKENS
+    )
+
+
+def test_wide_slices_shape_and_recall(spark):
+    """wide=True: 10-nibble slices from two salted digests -- distinct
+    values per hash column, 10-char width, and full recall on planted
+    near-dups (the exact verify keeps precision exact by construction)."""
+    rows = [
+        (1, "alpha beta gamma delta epsilon zeta eta theta iota kappa"),
+        (2, "alpha beta gamma delta epsilon zeta eta theta iota kappax"),  # near-dup of 1
+        (3, "one two three four five six seven eight nine ten"),
+    ]
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    tok = _token_set(docs, "text", "doc_id")
+    sig = minhash_signatures(tok, num_hashes=6, wide=True).collect()
+    for r in sig:
+        vals = [r[f"h{i}"] for i in range(1, 7)]
+        assert all(len(v) == 10 for v in vals)
+    # the 6 wide hashes are NOT all identical for a multi-token doc
+    r1 = next(r for r in sig if r["doc_id"] == 1)
+    assert len({r1[f"h{i}"] for i in range(1, 7)}) > 1
+
+    pairs = minhash_lsh_pairs(docs, threshold=0.5, wide=True).collect()
+    assert {(r["doc_a"], r["doc_b"]) for r in pairs} == {(1, 2)}
+    assert pairs[0]["jaccard"] >= 0.5
+
+
+def test_wide_num_hashes_bound():
+    with pytest.raises(ValueError):
+        _minhash_min_exprs(7, wide=True)

@@ -284,31 +284,6 @@ def test_sql_defined_dynamic_table_incremental(spark, tmp_path):
     assert incremental == canon(spark.sql(sql))
 
 
-def test_jsonl_schema_not_mutated(spark, tmp_path):
-    """read_jsonl_corpus must not append _corrupt_record to the shared
-    DOC_SCHEMA (StructType.add mutates in place): two reads in a row
-    previously accumulated duplicate corrupt columns."""
-    import json as _json
-
-    from sfguide_intro_to_cdc_using_snowflake_postgres_connector_dynamic_tables_spark.sources.jsonl_source import (
-        DOC_SCHEMA,
-        read_jsonl_corpus,
-        split_quarantine,
-    )
-
-    p = tmp_path / "docs.jsonl"
-    p.write_text(
-        _json.dumps({"doc_id": 1, "text": "hello world", "lang": "en", "source": "a"})
-        + "\n{not json\n"
-    )
-    before = [f.name for f in DOC_SCHEMA.fields]
-    clean1, bad1 = split_quarantine(read_jsonl_corpus(spark, str(p)))
-    clean2, bad2 = split_quarantine(read_jsonl_corpus(spark, str(p)))  # second read: same schema
-    assert [f.name for f in DOC_SCHEMA.fields] == before
-    assert clean1.count() == clean2.count() == 1
-    assert bad1.count() == bad2.count() == 1
-
-
 def test_dynamic_table_sql_allows_extract_from(spark, tmp_path):
     """EXTRACT(YEAR FROM ts) / SUBSTRING(x FROM 1) are function syntax,
     not table scans -- the unknown-table guard must not flag them."""

@@ -144,34 +144,23 @@ def test_empty_partitioned_table_keeps_schema(spark, tmp_path):
     assert set(out.columns) == {"k", "v"}
 
 
-def test_read_key_buckets(spark, tmp_path, monkeypatch):
-    """The store-side probe reads exactly the buckets its keys hash
-    into, from ONE manifest read; empty keys read nothing (None) and
-    an unpartitioned table is read whole."""
+def test_read_buckets_reads_one_manifest(spark, tmp_path, monkeypatch):
+    """A bucket read returns exactly the listed buckets' rows, with its
+    paths and schema from ONE manifest read."""
     store = ParquetTableStore(str(tmp_path / "s"))
     df = spark.range(100).select(F.col("id").alias("k"), (F.col("id") % 7).alias("v"))
     store.overwrite("t", df, partition_key="k", n_buckets=8)
-    keys = spark.createDataFrame([(3,), (17,), (42,), (3,)], "k long")
-    ids = [r[0] for r in keys.select(store.bucket_expr("k", 8)).distinct().collect()]
-    want = store.read(spark, "t").filter(store.bucket_expr("k", 8).isin(ids))
-    got = store.read_key_buckets(spark, "t", keys)
-    assert _rows(got) == _rows(want)  # sorted row lists: multiset equality
-    assert 0 < got.count() < 100
-    assert store.read_key_buckets(spark, "t", keys.limit(0)) is None
+    want = store.read(spark, "t").filter(store.bucket_expr("k", 8).isin([0, 3]))
 
     reads = []
     real = store._read_manifest
     monkeypatch.setattr(
         store, "_read_manifest", lambda name, v: reads.append(v) or real(name, v)
     )
-    store.read_key_buckets(spark, "t", keys)
+    got = store.read_buckets(spark, "t", [0, 3])
     assert len(reads) == 1
-    store.read_buckets(spark, "t", ids)
-    assert len(reads) == 2
-    monkeypatch.undo()
-
-    store.overwrite("u", df)
-    assert _rows(store.read_key_buckets(spark, "u", keys)) == _rows(df)
+    assert _rows(got) == _rows(want)  # sorted row lists: multiset equality
+    assert 0 < got.count() < 100
 
 
 def test_crash_orphan_stage_is_invisible_and_gcd(spark, tmp_path):
@@ -413,66 +402,30 @@ def test_rebucket_preserves_rows_and_enables_merge(spark, tmp_path):
     assert got[3] == 333 and got[77] == 777 and len(got) == 51
 
 
-def test_append_keeps_same_key_rows(spark, tmp_path):
-    """append() is for non-unique-key index tables: rows sharing the
-    partition key value with existing rows must survive (merge would
-    evict them), and only touched buckets are rewritten."""
-    from sfguide_intro_to_cdc_using_snowflake_postgres_connector_dynamic_tables_spark.streaming.store import (
-        ParquetTableStore,
-    )
-
+def test_merge_restamps_schema_marker_on_evolution(spark, tmp_path):
+    """A schema-evolving merge must re-stamp the zero-row schema
+    marker (ADVICE r4): after merging rows with a new column, an empty
+    or fully-pruned read must see the evolved column set, not the
+    stale pre-evolution one."""
     store = ParquetTableStore(str(tmp_path / "s"))
-    base = spark.createDataFrame(
-        [("band-x", 1), ("band-x", 2), ("band-y", 3)], "band string, doc_id long"
-    )
-    store.overwrite("idx", base, partition_key="band", n_buckets=4)
-    m1 = store._read_manifest("idx", store.current_version("idx"))
-    store.append(
-        spark,
-        "idx",
-        spark.createDataFrame([("band-x", 9)], "band string, doc_id long"),
-    )
-    got = {(r["band"], r["doc_id"]) for r in store.read(spark, "idx").collect()}
-    assert got == {("band-x", 1), ("band-x", 2), ("band-x", 9), ("band-y", 3)}
-    # untouched buckets carried forward by reference
-    m2 = store._read_manifest("idx", store.current_version("idx"))
-    carried = [b for b, d in m2["partitions"].items() if m1["partitions"].get(b) == d]
-    assert carried  # at least one bucket was not rewritten
-
-
-def test_append_restamps_schema_marker_on_evolution(spark, tmp_path):
-    """A schema-evolving append must re-stamp the zero-row schema
-    marker like merge() does (ADVICE r4): after appending rows with a
-    new column, an empty or fully-pruned read must see the evolved
-    column set, not the stale pre-evolution one."""
-    from sfguide_intro_to_cdc_using_snowflake_postgres_connector_dynamic_tables_spark.streaming.store import (
-        ParquetTableStore,
-    )
-
-    store = ParquetTableStore(str(tmp_path / "s"))
-    base = spark.createDataFrame(
-        [("band-x", 1), ("band-y", 3)], "band string, doc_id long"
-    )
-    store.overwrite("idx", base, partition_key="band", n_buckets=4)
+    base = spark.createDataFrame([(1, "a"), (3, "c")], "k long, v string")
+    store.overwrite("t", base, partition_key="k", n_buckets=4)
     evolved = spark.createDataFrame(
-        [("band-x", 9, 0.5)], "band string, doc_id long, score double"
+        [(9, "i", 0.5)], "k long, v string, score double"
     )
-    store.append(spark, "idx", evolved)
+    store.merge(spark, "t", evolved, evolved.select("k"))
     # full read: evolved column present, old rows NULL-filled
-    got = store.read(spark, "idx")
-    assert set(got.columns) == {"band", "doc_id", "score"}
+    got = store.read(spark, "t")
+    assert set(got.columns) == {"k", "v", "score"}
     # fully-pruned read: only the schema marker contributes columns
-    pruned = store.read_buckets(spark, "idx", [])
-    assert set(pruned.columns) == {"band", "doc_id", "score"}
+    pruned = store.read_buckets(spark, "t", [])
+    assert set(pruned.columns) == {"k", "v", "score"}
     assert pruned.count() == 0
-    # non-evolving append does NOT churn the marker
-    m_before = store._read_manifest("idx", store.current_version("idx"))
-    store.append(
-        spark,
-        "idx",
-        spark.createDataFrame([("band-z", 7, 1.0)], "band string, doc_id long, score double"),
-    )
-    m_after = store._read_manifest("idx", store.current_version("idx"))
+    # non-evolving merge does NOT churn the marker
+    m_before = store._read_manifest("t", store.current_version("t"))
+    ups = spark.createDataFrame([(7, "g", 1.0)], "k long, v string, score double")
+    store.merge(spark, "t", ups, ups.select("k"))
+    m_after = store._read_manifest("t", store.current_version("t"))
     assert m_after["schema_dir"] == m_before["schema_dir"]
 
 

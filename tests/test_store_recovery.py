@@ -226,7 +226,6 @@ _PARTITIONED_WRITES = {
         "t", ups, partition_key="k", n_buckets=4
     ),
     "merge": lambda spark, s, ups: s.merge(spark, "t", ups, ups.select("k")),
-    "append": lambda spark, s, ups: s.append(spark, "t", ups),
     "optimize": lambda spark, s, ups: s.optimize(spark, "t"),
     "optimize_buckets": lambda spark, s, ups: s.optimize(spark, "t", buckets=[0, 1]),
     "rebucket": lambda spark, s, ups: s.rebucket(spark, "t", 2),

@@ -1,7 +1,6 @@
-"""Shard export with integrity manifest, and the learned-classifier
-ingest gate: the two seams that connect the training-prep operators to
-the outside world (a training job reading shards; a stream feeding the
-corpus store)."""
+"""Shard export with integrity manifest: the seam that connects the
+training-prep operators to the outside world (a training job reading
+shards)."""
 
 from __future__ import annotations
 
@@ -84,39 +83,6 @@ def test_verify_catches_all_three_failure_modes(spark, tmp_path):
         json.dump(m, fh)
     rep = verify_shards(spark, out)
     assert 0 in rep["mismatched"]
-
-
-def test_ingest_batch_classifier_gate(spark, tmp_path):
-    """clf_weights swaps the heuristic gate for the learned scorer:
-    the kept set must equal linear_token_score >= threshold."""
-    from sfguide_intro_to_cdc_using_snowflake_postgres_connector_dynamic_tables_spark.operators.quality_model import (
-        linear_token_score,
-    )
-    from sfguide_intro_to_cdc_using_snowflake_postgres_connector_dynamic_tables_spark.streaming.corpus_ingest import (
-        ingest_batch,
-    )
-    from sfguide_intro_to_cdc_using_snowflake_postgres_connector_dynamic_tables_spark.streaming.store import (
-        ParquetTableStore,
-    )
-
-    docs = load_table(spark, SF_DIR, "documents").select("doc_id", "text")
-    weights = {"join": 0.6, "slow": -0.9, "scan": 0.3}
-    bias = -0.213
-    store = ParquetTableStore(str(tmp_path / "store"))
-    ingest_batch(
-        store, spark, docs, table="corpus",
-        min_quality=0.5, clf_weights=weights, clf_bias=bias,
-    )
-    kept = {r["doc_id"] for r in store.read(spark, "corpus").select("doc_id").collect()}
-    scored = linear_token_score(docs, weights, bias)
-    expect = {
-        r["doc_id"]
-        for r in scored.filter(F.col("clf_score") >= 0.5).select("doc_id").collect()
-    }
-    # the gate also dedups identical content batch-internally; the test
-    # corpus has distinct texts, so the sets match exactly
-    assert kept == expect and len(kept) > 0
-    assert kept != {r["doc_id"] for r in docs.select("doc_id").collect()}
 
 
 def _dir_bytes(path):

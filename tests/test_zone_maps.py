@@ -110,7 +110,7 @@ def test_rebucket_and_optimize_keep_zones(spark, tmp_path):
     assert m.get("zone_cols") == ["v", "d"] and set(m["zones"]) == set(m["partitions"])
     got = sorted(r["id"] for r in store.read_pruned(spark, "t", "v", 100, 120).collect())
     assert got == [10, 11, 12]
-    # append rewrites only the receiving bucket: it restates that
+    # merge rewrites only the receiving bucket: it restates that
     # bucket's zones and drops its file_zones; every other bucket keeps
     # both exactly
     store.optimize(spark, "t", zorder_cols=["d"])
@@ -119,7 +119,7 @@ def test_rebucket_and_optimize_keep_zones(spark, tmp_path):
     extra = spark.createDataFrame(
         [(3, 5000, dt.date(2030, 1, 1))], "id long, v long, d date"
     )
-    store.append(spark, "t", extra)
+    store.merge(spark, "t", extra, extra.select("id"))
     m2 = store._read_manifest("t", store.current_version("t"))
     rewritten = {b for b in m2["partitions"] if m2["partitions"][b] != m1["partitions"][b]}
     assert len(rewritten) == 1 and set(m2["zones"]) == set(m2["partitions"])
