@@ -524,18 +524,6 @@ class ParquetTableStore:
                 continue
         return pinned
 
-    def _partitioned_manifest(self, name: str) -> dict:
-        """The current version's manifest -- ONE version resolve and ONE
-        manifest read, so a read's paths and schema describe the same
-        version even while a writer commits."""
-        v = self.current_version(name)
-        if v is None:
-            raise FileNotFoundError(f"table {name!r} has no committed version under {self.root}")
-        m = self._read_manifest(name, v)
-        if m is None or "key" not in m:
-            raise ValueError(f"table {name!r} is not partitioned")
-        return m
-
     def _manifest_bucket_paths(self, name: str, m: dict, bucket_ids) -> list[str]:
         tdir = self._table_dir(name)
         return [
@@ -543,13 +531,6 @@ class ParquetTableStore:
             for b in bucket_ids
             if str(b) in m["partitions"]
         ]
-
-    def _read_manifest_buckets(
-        self, spark: SparkSession, name: str, m: dict, bucket_ids
-    ) -> DataFrame:
-        paths = self._manifest_bucket_paths(name, m, bucket_ids)
-        paths.append(os.path.join(self._table_dir(name), m["schema_dir"]))
-        return self._read_parquet(spark, paths, self._manifest_schema(m))
 
     # -- zone maps (per-bucket min/max pruning on NON-KEY columns) -----------
 
@@ -758,10 +739,18 @@ class ParquetTableStore:
         is still a readable DataFrame).  This is the read-side mirror of
         ``merge``'s O(delta-buckets) writes: a consumer that knows which
         key buckets it cares about pays I/O proportional to those
-        buckets, not to the table."""
-        return self._read_manifest_buckets(
-            spark, name, self._partitioned_manifest(name), bucket_ids
-        )
+        buckets, not to the table.  Paths and schema come from ONE
+        manifest read, so they describe the same version even while a
+        writer commits."""
+        v = self.current_version(name)
+        if v is None:
+            raise FileNotFoundError(f"table {name!r} has no committed version under {self.root}")
+        m = self._read_manifest(name, v)
+        if m is None or "key" not in m:
+            raise ValueError(f"table {name!r} is not partitioned")
+        paths = self._manifest_bucket_paths(name, m, bucket_ids)
+        paths.append(os.path.join(self._table_dir(name), m["schema_dir"]))
+        return self._read_parquet(spark, paths, self._manifest_schema(m))
 
     def versions(self, name: str) -> list[int]:
         """Committed versions still readable on disk, oldest first.
